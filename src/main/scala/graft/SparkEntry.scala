@@ -23,17 +23,17 @@ object SparkEntry {
   /** Row-group count per parquet file, cached per path (footer metadata only
     * — never row data). Parquet scans parallelize at row-group grain, so this
     * is the file's TRUE scan parallelism no matter what the split config
-    * says. */
+    * says. An unreadable footer reads as `Int.MaxValue` ("not degenerate")
+    * and is NOT cached, so a transient read error is retried next time. */
   private val rowGroupCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def parquetRowGroups(spark: SparkSession, path: String): Int =
-    rowGroupCounts.computeIfAbsent(path, (p: String) =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Integer.valueOf(r.getRowGroups.size()) finally r.close()
-      } catch { case _: Throwable => Integer.valueOf(Int.MaxValue) }
-    ).intValue
+    try rowGroupCounts.computeIfAbsent(path, (p: String) => {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try Integer.valueOf(r.getRowGroups.size()) finally r.close()
+    }).intValue
+    catch { case scala.util.control.NonFatal(_) => Int.MaxValue }
 
   /** Read a base table and, ONLY when its file is parallelism-degenerate
     * (fewer row groups than half the executor threads — e.g. the sf test

@@ -115,8 +115,10 @@ final case class CrawlConfig(
       * so crawl order stays parallelism-invariant. */
     maxBucketRows: Int = 4096,
     /** pre-shuffle the D1 probe by cuckoo bucket: true on a real cluster
-      * (per-executor filter locality), false in local mode (one shared JVM
-      * cache — the shuffle would be pure overhead). See SeenSet.markDupes. */
+      * (each executor then loads only its slice of the filter shards), false
+      * in local mode, where every task shares the one JVM's filter cache and
+      * the shuffle costs more than it saves. Either way each shard loads at
+      * most once per executor JVM per round. See SeenSet.markDupes. */
     probeRepartition: Boolean = false,
     /** robots.txt disallow rules consulted before scheduling (C4). */
     robots: Seq[RobotsRule] = Nil,

@@ -565,13 +565,4 @@ object Segregate {
     if (segHasContent) sents += 1
     sents >= minSents
   }
-
-  /** Segregate + filter in one typed pass (zero shuffles, zero interpreted
-    * column HOFs — the crawler's paragraph path). */
-  def paragraphsFiltered(docs: Dataset[Doc], minSents: Int = 3, minWords: Int = 30): Dataset[Paragraph] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap(d =>
-      segregateDoc(d.doc_id, "plain", d.spans)
-        .filter(p => sentKeepStr(p.content, minSents, minWords)))
-  }
 }

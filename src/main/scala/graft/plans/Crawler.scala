@@ -68,12 +68,17 @@ final case class RoundReport(
   *     parquet footers — zero counting jobs) — crash-resumable at round
   *     granularity ([[Snapshots]]), then cuckoo+bloom filter update.
   *
-  * Job budget per round is deliberately small (~a dozen actions): three
-  * metric aggregations on persisted frames, seven table writes, two filter
-  * updates. Everything else is derived arithmetically or from parquet
-  * footers. Every keep-first order is an explicit total order (priority, url)
-  * so the whole crawl — fetch order, final seen set, kept docs — is invariant
-  * to partition count and parallelism (CrawlSpec asserts it).
+  * Actions per round are deliberately few: three metric aggregations on
+  * persisted frames, seven table writes, two filter updates. Everything else
+  * is derived arithmetically or from parquet footers. Spark JOBS are more
+  * (AQE submits one per query stage and broadcast, plus schema-inference
+  * reads): counted with a SparkListener on the perfbench recrawl workload at
+  * local[4] with compaction every round, a round on an empty store runs 49
+  * jobs and a round with history 87, 24 of them in the D2/D3 dedup chain
+  * (see Dedup.antiHistory for why that chain stays linear). Every
+  * keep-first order is an explicit total order (priority, url) so the whole
+  * crawl — fetch order, final seen set, kept docs — is invariant to
+  * partition count and parallelism (CrawlSpec asserts it).
   */
 object Crawler {
 
@@ -87,6 +92,11 @@ object Crawler {
   val MetricsTable = "metrics"
 
   def filterDir(workDir: String): String = s"$workDir/filters"
+
+  /** fetch_log file and row-group bounds (their rationale sits at the
+    * fetch_log write in [[runRound]]). */
+  private val FetchLogRecordsPerFile = 5000L
+  private val FetchLogBlockMb = 32L
 
   /** Seen table across all committed rounds (exact side of D1); None when no
     * round has committed a seen delta yet (virgin store). */
@@ -188,10 +198,6 @@ object Crawler {
     // model — and the bench's tmpfs) it is pure extra copies.
     spark.sparkContext.hadoopConfiguration
       .set("parquet.hadoop.vectored.io.enabled", "false")
-    // dev knob for write-churn A/B: parquet page size (bytes) for all crawl
-    // table writes; unset = parquet-mr default (1 MB)
-    sys.env.get("GRAFT_PARQUET_PAGE").foreach(v =>
-      spark.sparkContext.hadoopConfiguration.set("parquet.page.size", v))
     // Payload-aware vectorized-reader shape: the default 4096-row batch
     // means a ~60 MB on-heap column vector PER TASK for the ~15 KB binary
     // payload column — reserveInternal alone was 90 GB (22%) of the mega
@@ -325,7 +331,7 @@ object Crawler {
       // 1000-row bound — measured 8% faster at local[32] AND 20% at local[8]
       // (per-file task-launch/footer/commit overhead steals worker cpu) with
       // ~40 GB less allocation per wave
-      maxRecordsPerFile = sys.env.getOrElse("GRAFT_FETCHLOG_RECS_PER_FILE", "5000").toLong,
+      maxRecordsPerFile = FetchLogRecordsPerFile,
       // compression rides the session default (snappy, GRAFT_CRAWL_CODEC —
       // tuneScanGranularity has the round-4 zstd/lz4 A/B verdict): an
       // uncompressed log was tried and MEASURED 2.5-3× slower at 32 threads
@@ -346,8 +352,7 @@ object Crawler {
         // block size promoted ~4 GB of page buffers per wave into the old
         // gen and triggered multi-second Full GCs (gc log, round 4). The
         // 16 MB scan bins split these files at row-group grain regardless.
-        "parquet.block.size" ->
-          (sys.env.getOrElse("GRAFT_FETCHLOG_BLOCK_MB", "32").toLong * 1024 * 1024).toString)))
+        "parquet.block.size" -> (FetchLogBlockMb * 1024 * 1024).toString)))
     tick("fetch+write-events")
     // valid now: the write above materialized the sched cache
     val scheduledCount = schedCtr.scheduled

@@ -105,6 +105,11 @@ class HistoryPlanSpec extends AnyFunSuite {
         s"history scan must be column-pruned to join keys, read: $read")
       assert(read.size <= 3, s"over-wide history scan: $read")
     }
+    // the four chained steps grow the plan linearly, ≤ 4 leaves per step:
+    // taking each step's history hits from its own survivors referenced the
+    // step's input twice and doubled the plan at every step (31 leaves)
+    val leaves = kept.queryExecution.optimizedPlan.collectLeaves().size
+    assert(leaves <= 16, s"D2/D3 cascade plan has $leaves leaves (limit 16)")
   }
 
   test("wide-row discipline: spans/payload columns never ride a shuffle exchange in a real crawl") {

@@ -93,6 +93,44 @@ class SeenSetSpec extends AnyFunSuite {
     assert(missesRebuilt === 0)
   }
 
+  test("probe filters: a later call sees filters written since, calls never share filters") {
+    val buckets = 4
+    def keys(ids: Seq[Long]) =
+      ids.map(i => (i * 2654435761L, s"https://h.example.org/u/$i")).toDF("url_hash", "canonical_url")
+    def dupCount(m: org.apache.spark.sql.DataFrame) = m.filter(col("__dup")).count()
+    val incoming = keys(0L until 400L)
+
+    // a filter update between two calls in one JVM is never served stale
+    val dirA = Files.createTempDirectory("seenprobeA").toString
+    val first = keys(0L until 100L)
+    val second = keys(100L until 200L)
+    SeenSet.rebuildFilters(first, dirA, buckets)
+    assert(dupCount(SeenSet.markDupes(incoming, first, dirA, buckets,
+      probeRepartition = false, seenKeysUnique = true)) === 100L)
+    SeenSet.addToFilters(second, dirA, buckets)
+    SeenSet.addToBloom(second, dirA, buckets)
+    val seenA = first.union(second)
+    assert(dupCount(SeenSet.markDupes(incoming, seenA, dirA, buckets,
+      probeRepartition = false, seenKeysUnique = true)) === 200L,
+      "the second call must probe the filters written after the first")
+
+    // two stores whose exact tables hold both key sets but whose filters
+    // each hold only their own: a call that read the other store's filters
+    // would let that store's keys through its bloom and flag them
+    val dirB = Files.createTempDirectory("seenprobeB").toString
+    val onlyB = keys(200L until 300L)
+    SeenSet.rebuildFilters(onlyB, dirB, buckets)
+    val both = seenA.union(onlyB)
+    val markA = SeenSet.markDupes(incoming, both, dirA, buckets,
+      probeRepartition = false, seenKeysUnique = true)
+    val markB = SeenSet.markDupes(incoming, both, dirB, buckets,
+      probeRepartition = false, seenKeysUnique = true)
+    // interleaved: A loads, B replaces A's filters, A runs again
+    assert(dupCount(markA) === 200L)
+    assert(dupCount(markB) === 100L)
+    assert(dupCount(markA) === 200L)
+  }
+
   test("hash-collision safety: same url_hash, different canonical_url is NOT a dup") {
     val dir = Files.createTempDirectory("seencol").toString
     val seen = Seq((42L, "https://a.example.org/x")).toDF("url_hash", "canonical_url")
