@@ -485,7 +485,7 @@ object Segregate {
 
   // ---- UTF-8 byte-slice twins of the paragraph filter ----
   //
-  // The streaming paragraph kernel (Wire.paragraphsFilteredStreaming) folds
+  // The streaming paragraph kernel (Wire.paragraphsArrayData) folds
   // span bytes without decoding; these run the SAME filter decisions on the
   // undecoded slice. Exactness: all delimiter classes here are ASCII
   // ('.', '!', '?', ' ', '\t'..'\r', letters), and every byte of a multi-byte

@@ -186,11 +186,10 @@ object Crawler {
     // byte-sized split planning under high compression outweigh the saved
     // bus bytes); lz4_raw (~9× smaller than snappy) was statistically
     // indistinguishable across five 32-core and five 8-core alternations
-    // (effect, if any, below the host's ±40% weather). The knob stays for
-    // re-testing on quieter hardware, where lz4's fewer durable bytes
-    // should pay on the write-bandwidth-ceiling story.
-    spark.conf.set("spark.sql.parquet.compression.codec",
-      sys.env.getOrElse("GRAFT_CRAWL_CODEC", "snappy"))
+    // (effect, if any, below the host's ±40% weather). Worth re-testing on
+    // quieter hardware, where lz4's fewer durable bytes should pay on the
+    // write-bandwidth-ceiling story.
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
     // Hadoop vectored IO reads pages through a weak-ref'd buffer pool — under
     // crawl-wave GC pressure the weak refs die and every read re-allocates
     // (16.8 GB per wave, JFR round 4). Its range-coalescing win targets
@@ -220,14 +219,6 @@ object Crawler {
     import spark.implicits._
 
     tuneScanGranularity(spark)
-
-    val __timing = sys.env.contains("GRAFT_TIMING")
-    var __t = System.nanoTime()
-    def tick(label: String): Unit = if (__timing) {
-      val now = System.nanoTime()
-      println(f"      [t] $label: ${(now - __t) / 1e9}%.1fs")
-      __t = now
-    }
 
     // Stage attribution: name every job's call site (thread-local, so each
     // concurrent Future names its own jobs) — the 8-vs-32 scaling work needs
@@ -272,7 +263,6 @@ object Crawler {
         when($"__dup", lit("dup")).when($"__robots_denied", lit("robots")))
       .select((fCols.map(col) :+ $"__drop"): _*)
       .persist()
-    tick("d1-probe")
 
     // ---- politeness scheduling + fetch ----
     // Scheduling counters ride the scheduling mapPartitions as accumulators
@@ -281,7 +271,6 @@ object Crawler {
     // of fixed wall per round, paid identically at every parallelism.
     val schedCtr = graft.operators.SchedCounters.create(spark)
     val sched = Politeness.scheduleFlagged(flagged, cfg, Some(schedCtr)).persist()
-    tick("schedule")
 
     // ---- fetch → durable events table (fetch_log) ----
     // The raw fetch output carries the doc spans — a WIDE frame. It is
@@ -332,14 +321,13 @@ object Crawler {
       // (per-file task-launch/footer/commit overhead steals worker cpu) with
       // ~40 GB less allocation per wave
       maxRecordsPerFile = FetchLogRecordsPerFile,
-      // compression rides the session default (snappy, GRAFT_CRAWL_CODEC —
-      // tuneScanGranularity has the round-4 zstd/lz4 A/B verdict): an
+      // no compression option: the log rides the session default (snappy;
+      // tuneScanGranularity has the round-4 zstd/lz4 A/B verdict). An
       // uncompressed log was tried and MEASURED 2.5-3× slower at 32 threads
       // with unchanged 8-thread wall — the log rides the node-local scratch
       // (tmpfs in the bench), so every saved on-disk byte is saved MEMORY
       // traffic, and the 32-wide side of the scaling pair is exactly the
       // bandwidth-saturated one.
-      compression = sys.env.get("GRAFT_FETCHLOG_CODEC").orNull,
       // no min/max statistics for the opaque payload blob: nobody range-
       // predicates on payload bytes, and parquet's stats tracking copies
       // every new extreme of a ~26 KB binary (Binary.copy inside
@@ -353,7 +341,6 @@ object Crawler {
         // gen and triggered multi-second Full GCs (gc log, round 4). The
         // 16 MB scan bins split these files at row-group grain regardless.
         "parquet.block.size" -> (FetchLogBlockMb * 1024 * 1024).toString)))
-    tick("fetch+write-events")
     // valid now: the write above materialized the sched cache
     val scheduledCount = schedCtr.scheduled
     val deferredCount = schedCtr.deferred
@@ -399,7 +386,6 @@ object Crawler {
     val evAggF = Future(named("ev-agg")(eventsNarrow.agg(
       count(when($"status" === "ok", 1)).as("ok"),
       count(when($"status" === "ok" && $"kind" === "pdf", 1)).as("docs_raw")).collect()(0)))
-    tick("ev-agg")
 
     val okEvents = events.filter($"status" === "ok")
     val okNarrow = eventsNarrow.filter($"status" === "ok")
@@ -540,7 +526,6 @@ object Crawler {
     val judgCount =
       if (pdfOnly) 0L
       else named("judgments-write")(Snapshots.writeTable(workDir, round, JudgmentsTable, judgKept))
-    tick("judgments-write")
     // pdf-only rounds: judgKept is already an empty LocalRelation — reuse it
     // instead of re-reading a zero-row table (schema-infer + scan-plan
     // latency)
@@ -588,7 +573,6 @@ object Crawler {
     // the judgments chain — by the time the routing windows finish, the
     // hash scan is done or nearly so.
     Await.result(keptMaterializedF, Duration.Inf)
-    tick("docs-dedup")
     // survivors' spans decode ZERO-COPY (UTF8String slices of the payload
     // array, straight to Catalyst rows — WireSpansExpr): the round-3 UDF
     // decoded Seq[Span] objects for the struct encoder to re-encode, and that
@@ -606,8 +590,7 @@ object Crawler {
     // concurrent open parquet writers (page/slab buffers were the tail's
     // top allocation site) — tail wall 12.7/8.5 → 7.3/6.4 s at 32 cores,
     // a wash at 8 (the width where buffers never contended).
-    val tailTasks = math.max(1, spark.sparkContext.defaultParallelism *
-      sys.env.getOrElse("GRAFT_TAIL_TASKS_MULT", "2").toInt)
+    val tailTasks = math.max(1, spark.sparkContext.defaultParallelism * 2)
     val docsKept = okEvents.filter($"kind" === "pdf")
       .select($"doc_id", $"payload")
       .coalesce(tailTasks)
@@ -664,7 +647,6 @@ object Crawler {
       DocsTable -> Await.result(docsWriteF, Duration.Inf),
       JudgmentsTable -> judgCount,
       FetchLogTable -> fetchLogCount)
-    tick("tail-writes")
     val docsCount = counts(DocsTable)
     Snapshots.commitManifest(workDir, round, counts,
       lineage = Map(
@@ -694,9 +676,7 @@ object Crawler {
       val fCuckoo = Future(named("cuckoo-update")(SeenSet.addToFilters(committedSeenDelta, filterDir(workDir))))
       val fBloom = Future(named("bloom-update")(SeenSet.addToBloom(committedSeenDelta, filterDir(workDir))))
       Await.result(fCuckoo, Duration.Inf)
-      tick("cuckoo-update")
       Await.result(fBloom, Duration.Inf)
-      tick("bloom-update")
     }
 
     // periodic history compaction (Iceberg rewrite_data_files analog): fold
@@ -707,7 +687,6 @@ object Crawler {
       Seq(SeenTable, DocsTable, JudgmentsTable, MergeRequestsTable)
         .map(t => Future(named(s"compact-$t")(Snapshots.compact(spark, workDir, t, round))))
         .foreach(Await.result(_, Duration.Inf))
-      tick("compact")
     }
 
     val committedFrontier = spark.read

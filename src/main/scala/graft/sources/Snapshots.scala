@@ -79,7 +79,7 @@ object Snapshots {
     * semantic (politeness buckets): downstream scans then parallelize by
     * file instead of inheriting one giant partition per dominant host. */
   def writeTable(dir: String, round: Int, name: String, df: DataFrame,
-      maxRecordsPerFile: Long = 0L, compression: String = null,
+      maxRecordsPerFile: Long = 0L,
       extraOptions: Map[String, String] = Map.empty): Long = {
     val w = df.write.mode("overwrite")
       // crawl-state values (urls, hashes, payloads) are near-unique per
@@ -88,9 +88,8 @@ object Snapshots {
       // allocation per chunk before every fallback (JFR, round 4)
       .option("parquet.enable.dictionary", "false")
       .options(extraOptions)
-    val w1 = if (compression != null) w.option("compression", compression) else w
-    val w2 = if (maxRecordsPerFile > 0) w1.option("maxRecordsPerFile", maxRecordsPerFile) else w1
-    w2.parquet(tablePath(dir, round, name))
+    val w1 = if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+    w1.parquet(tablePath(dir, round, name))
     footerCount(tablePath(dir, round, name))
   }
 

@@ -404,17 +404,6 @@ object Wire {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
   }
 
-  /** Streaming twin of `Segregate.segregateDoc + sentKeepStr` over the
-    * payload bytes — the paragraph fold without Span/Doc objects (the
-    * object-decode fold was the crawl round's single heaviest stage: 210
-    * cpu-s + 38 s GC at local[32] in the round-4 attribution). Only two
-    * kinds of Strings materialize: starter-span texts (the reference-numeral
-    * regex needs a String) and the output paragraph contents; every other
-    * span's chars stream straight into the content builder, and skipped
-    * spans (tables, images, text outside an open paragraph) are never
-    * decoded at all. Pinned ≡ the object path in SegregateSpec. Falls back
-    * to the object fold if spans arrive offset-unsorted (same contract as
-    * [[docHashesStreaming]]). */
   /** Survivor-paragraph consumer for [[paragraphsFoldStreaming]] — a trait,
     * not a Function6, so the per-paragraph emit stays unboxed. `buf` is a
     * reusable scratch: the slice `[start, start+len)` is only valid inside
@@ -422,30 +411,6 @@ object Wire {
   trait ParaSink {
     def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
         reference: String): Unit
-  }
-
-  def paragraphsFilteredStreaming(payload: Array[Byte], extractor: String,
-      minSents: Int = 3, minWords: Int = 30): Seq[graft.model.Paragraph] = guarded("paragraphsFilteredStreaming", payload) {
-    if (payload == null) return Nil
-    val p0 = docBlockStart(payload)
-    if (p0 < 0) return Nil
-    // length -1 encodes a null doc_id (putStr null contract) — mirror the
-    // object path (decodeDoc yields Doc(null, spans)) instead of crashing
-    val docIdLen = readIntAt(payload, p0)
-    val docId =
-      if (docIdLen < 0) null else new String(payload, p0 + 4, docIdLen, UTF_8)
-    val out = Vector.newBuilder[graft.model.Paragraph]
-    val rc = paragraphsFoldStreaming(payload, minSents, minWords, new ParaSink {
-      def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-          reference: String): Unit =
-        out += graft.model.Paragraph(docId, extractor, page, seq,
-          new String(buf, start, len, UTF_8), reference)
-    })
-    if (rc == FoldUnsorted) // honor the sort contract via the object path
-      decodeDoc(payload).toSeq.flatMap(d =>
-        graft.operators.Segregate.segregateDoc(d.doc_id, extractor, d.spans)
-          .filter(q => graft.operators.Segregate.sentKeepStr(q.content, minSents, minWords)))
-    else out.result()
   }
 
   /** The fetch-projection twin ([[graft.functions.WireFunctions.wireParagraphs]]):

@@ -57,9 +57,25 @@ class HashingSpec extends AnyFunSuite {
     assert(keptCol === keptScala)
   }
 
+  /** Offset-unsorted docs for the streaming kernels' object-path fallback:
+    * a synth doc with its spans fully reversed, and one with its last two
+    * spans swapped. The swapped doc is chosen so its first n-2 spans already
+    * yield a surviving paragraph: the paragraph fold emits it before it
+    * meets the disorder, so its fallback must discard what it emitted. */
+  private def unsortedDocs(cfg: SynthConfig): Seq[Doc] = {
+    val reversed = Doc("u-rev", Synth.spansOf(cfg, 0L).reverse)
+    val swapped = (0L until 200L).iterator.map(Synth.spansOf(cfg, _)).collectFirst {
+      case sp if sp.length >= 3 && Segregate.segregateDoc("u", "plain", sp.dropRight(2))
+          .exists(p => Segregate.sentKeepStr(p.content)) =>
+        Doc("u-swap", sp.dropRight(2) ++ Seq(sp.last, sp(sp.length - 2)))
+    }
+    assert(swapped.isDefined, "no synth doc emits a paragraph before its last two spans")
+    Seq(reversed, swapped.get)
+  }
+
   test("Wire.docHashesStreaming equals Dedup.docHashes(decodeSpans) bit-for-bit") {
     val cfg = SynthConfig()
-    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i))) ++ unsortedDocs(cfg)
     // adversarial shapes: unicode (2/3-byte UTF-8), supplementary-plane code
     // points (4-byte → surrogate pairs), unicode numerals/spaces in starter
     // position, null text, null media_ref, empty doc
@@ -80,9 +96,13 @@ class HashingSpec extends AnyFunSuite {
     }
   }
 
-  test("Wire.paragraphsFilteredStreaming equals segregateDoc+sentKeepStr on objects") {
+  test("Wire.paragraphsArrayData equals segregateDoc+sentKeepStr on objects") {
+    // Compares CONTENT, not just counts. Regression (round 4): the Catalyst
+    // sink wrapped the reusable fold scratch zero-copy (UTF8String.fromBytes
+    // aliases the array), so every row read back as the LAST paragraph's
+    // bytes once the fold moved on — counts matched, content was garbage.
     val cfg = SynthConfig()
-    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i))) ++ unsortedDocs(cfg)
     val weird = Seq(
       Doc("w0", Seq(Span("text", "1. ü¶€ starter. Two. Three sentences here.", null, 0),
         Span("text", "continuation text", null, 1), Span("text", "2. next", null, 2))),
@@ -104,33 +124,17 @@ class HashingSpec extends AnyFunSuite {
       Doc("w9", Seq(Span("text", "𐄇. aegean ref. One. Two. Three.", null, 0))))
     (synthDocs ++ weird).foreach { d =>
       val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val streamed = graft.sources.Wire.paragraphsFilteredStreaming(payload, "plain")
-      val objects = Segregate.segregateDoc(d.doc_id, "plain", d.spans)
-        .filter(p => Segregate.sentKeepStr(p.content))
-      assert(streamed === objects, s"streaming paragraph mismatch for ${d.doc_id}")
-    }
-  }
-
-  test("Wire.paragraphsArrayData CONTENT equals the object path (no scratch aliasing)") {
-    // Regression (round 4): the Catalyst sink wrapped the reusable fold
-    // scratch zero-copy (UTF8String.fromBytes aliases the array), so every
-    // row read back as the LAST paragraph's bytes once the fold moved on —
-    // counts matched, content was garbage. This pins the actual strings of
-    // the wireParagraphs column against paragraphsFilteredStreaming.
-    val cfg = SynthConfig()
-    (0L until 25L).foreach { i =>
-      val d = Doc(s"d$i", Synth.spansOf(cfg, i))
-      val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val obj = graft.sources.Wire.paragraphsFilteredStreaming(payload, "plain")
       val arr = graft.sources.Wire.paragraphsArrayData(payload, "plain", 3, 30)
-      assert(arr != null, s"null array for d$i")
-      val viaExpr = (0 until arr.numElements()).map { k =>
+      assert(arr != null, s"null array for ${d.doc_id}")
+      val streamed = (0 until arr.numElements()).map { k =>
         val r = arr.getStruct(k, 4)
         (r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
           if (r.isNullAt(3)) null else r.getUTF8String(3).toString)
       }
-      val viaObj = obj.map(p => (p.page, p.paragraph_number, p.content, p.reference))
-      assert(viaExpr === viaObj, s"wireParagraphs content mismatch for d$i")
+      val objects = Segregate.segregateDoc(d.doc_id, "plain", d.spans)
+        .filter(p => Segregate.sentKeepStr(p.content))
+        .map(p => (p.page, p.paragraph_number, p.content, p.reference))
+      assert(streamed === objects, s"streaming paragraph mismatch for ${d.doc_id}")
     }
   }
 

@@ -34,7 +34,6 @@ class WireSpec extends AnyFunSuite {
     "decodeDoc" -> (b => Wire.decodeDoc(b)),
     "spansArrayData" -> (b => Wire.spansArrayData(b)),
     "docHashesStreaming" -> (b => Wire.docHashesStreaming(0L, "c", b)),
-    "paragraphsFilteredStreaming" -> (b => Wire.paragraphsFilteredStreaming(b, "plain", 1, 3)),
     "paragraphsArrayData" -> (b => Wire.paragraphsArrayData(b, "plain", 1, 3)))
 
   private def assertSaneFailure(name: String, bytes: Array[Byte]): Unit = {
