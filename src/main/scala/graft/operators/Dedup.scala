@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * `preprocess.py:173-203`) and step 3 (per-rendering content hash, chained in
   * rendering order, `src/pipeline/process.py:29-165`).
   *
-  * Everything is expressed as window keep-first / anti-join — NOT
-  * `dropDuplicates`, which does not guarantee which row survives (SURVEY.md
-  * L5). Keep-first order must be a total order supplied by the caller
-  * (`arrivalCols`), making results partition-count invariant.
+  * Everything is expressed as window keep-first plus one map-side history
+  * probe per cascade ([[keepFirstProbed]]) — NOT `dropDuplicates`, which
+  * does not guarantee which row survives (SURVEY.md L5). Keep-first order
+  * must be a total order supplied by the caller (`arrivalCols`), making
+  * results partition-count invariant.
   */
 object Dedup {
 
@@ -43,59 +44,111 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** D2: within-batch keep-first by full content identity, then anti-join
-    * against the historical content hashes (any frame carrying the staged
-    * columns — the docs table itself). Returns the kept rows; the dup count
-    * is `input count - kept count` (derived arithmetically by callers, no
-    * second evaluation of the window chain). `arrival` must be a total order
-    * (e.g. priority, doc_id). */
+  /** The staged content identity of D2 (cheap → expensive columns). */
+  val ContentKey: HistoryKey = HistoryKey("content", Seq("sz", "prefix_hash", "content_hash"))
+
+  /** The D3 identity of one rendering: its hash column. */
+  def renderingKey(rendering: String): HistoryKey = HistoryKey(rendering, Seq(renderHashCol(rendering)))
+
+  /** One identity a row is deduplicated on: the columns of the key, named so
+    * that the keys of one cascade can share one history probe. */
+  final case class HistoryKey(name: String, cols: Seq[String]) {
+    /** `name:v1:v2…` over the row's key columns, null when any of them is
+      * null (a null key matches nothing, as in an equi-join). The name keeps
+      * the keys of one probe apart; the values are numbers or hex, so the
+      * `:` separators cannot be forged. */
+    def tag: Column =
+      concat((lit(name) +: cols.flatMap(c => Seq(lit(":"), col(c).cast("string")))): _*)
+  }
+
+  private val TagCol = "__tag"
+  private val HitsCol = "__hits"
+
+  /** Keep-first by `key` under `order`, each kept row flagged against
+    * `history` for every one of `keys` with ONE map-side probe:
+    * {{{
+    *   tagged = rows × keys → (key…, tag)                  // round-bounded
+    *   hits   = ∪ per key: history.select(tag)  ⋈ broadcast(tagged.tag)
+    *   marks  = tagged ⋉ broadcast(hits)                   // rows' tags in history
+    *   (rows ∪ marks) ── one window partitioned by key ──→ first row + its tags in history
+    * }}}
+    * The round's tagged key set is broadcast once; each key's history branch
+    * reuses that exchange and reads only that key's columns, map-side, never
+    * shuffled. The one hit set comes back through a broadcast, and the hit
+    * marks ride the keep-first window's own exchange: a mark carries its
+    * row's `key`, so it lands in that row's window partition, and
+    * `collect_set` hands every row the tags of its partition that hit.
+    * Whether a row's key is in history does not depend on which other rows
+    * survive, so one probe serves every later step of a cascade
+    * ([[inHistory]]). Inner, not semi, join into `hits`: a semi join would
+    * be pushed into every union branch and repeat `tagged` in the plan once
+    * per key; the duplicates it lets through only repeat hit tags.
+    *
+    * Broadcasts are safe here: `tagged` is the caller's round batch
+    * (politeness bounded) and `hits` is a subset of its tags. Without the
+    * hint Catalyst's post-window statistics plan a sort-merge join whose map
+    * side shuffle-writes the whole history before AQE can convert it
+    * (HistoryPlanSpec walks the final plan). */
+  private[graft] def keepFirstProbed(
+      rows: DataFrame,
+      key: Seq[String],
+      order: Seq[Column],
+      keys: Seq[HistoryKey],
+      history: DataFrame): DataFrame = {
+    val tagged = rows.select((key.map(col) :+ explode(array(keys.map(_.tag): _*)).as(TagCol)): _*)
+    val hits = keys.map(k => history.select(k.tag.as(TagCol))).reduce(_ union _)
+      .join(broadcast(tagged.select(TagCol)), TagCol)
+    val marks = tagged.join(broadcast(hits), Seq(TagCol), "left_semi")
+    val byKey = Window.partitionBy(key.map(col): _*)
+    rows.withColumn(TagCol, lit(null).cast("string"))
+      .unionByName(marks, allowMissingColumns = true)
+      .withColumn(HitsCol, collect_set(col(TagCol)).over(byKey))
+      // rows before marks: the first row of a partition is a batch row
+      .withColumn("__rn", row_number().over(byKey.orderBy((col(TagCol).isNull.desc +: order): _*)))
+      .filter(col("__rn") === 1 && col(TagCol).isNull)
+      .drop("__rn", TagCol)
+  }
+
+  /** On a [[keepFirstProbed]] row: whether its `k` is in history. */
+  private[graft] def inHistory(k: HistoryKey): Column =
+    coalesce(array_contains(col(HitsCol), k.tag), lit(false))
+
+  /** Drop the flags [[keepFirstProbed]] added. */
+  private[graft] def dropHits(df: DataFrame): DataFrame = df.drop(HitsCol)
+
+  /** The D2/D3 cascade: for each key in turn, keep-first by that key among
+    * the previous step's survivors under `arrival` (a total order), then
+    * drop the survivors whose key is in `history`. One history probe flags
+    * every input row for all `keys` up front ([[keepFirstProbed]], on the
+    * first step's window); the later steps filter on those flags. A step's
+    * order of keep-first and history filter does not matter: rows sharing a
+    * key share its flag. With no history the cascade is the keep-first
+    * windows alone. Returns the kept rows with the input's columns. */
+  def dedupCascade(
+      docs: DataFrame,
+      keys: Seq[HistoryKey],
+      history: Option[DataFrame],
+      arrival: Seq[Column]): DataFrame = history match {
+    case None => keys.foldLeft(docs)((kept, k) => keepFirst(kept, k.cols.map(col), arrival))
+    case Some(h) =>
+      val first = keepFirstProbed(docs, keys.head.cols, arrival, keys, h)
+        .filter(!inHistory(keys.head))
+      dropHits(keys.tail.foldLeft(first) { (kept, k) =>
+        keepFirst(kept, k.cols.map(col), arrival).filter(!inHistory(k))
+      })
+  }
+
+  /** D2: within-batch keep-first by full content identity, then drop rows
+    * whose content is in `history` (any frame carrying the staged columns —
+    * the docs table itself). Returns the kept rows; the dup count is
+    * `input count - kept count` (derived arithmetically by callers, no
+    * second evaluation of the window chain). `arrival` must be a total
+    * order (e.g. priority, doc_id). */
   def contentDedup(
       docsWithHashes: DataFrame,
       history: Option[DataFrame], // columns: sz, prefix_hash, content_hash
-      arrival: Seq[Column]): DataFrame = {
-    val key = Seq(col("sz"), col("prefix_hash"), col("content_hash"))
-    val w = Window.partitionBy(key: _*).orderBy(arrival: _*)
-    val firsts = docsWithHashes.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    history match {
-      case Some(h) => antiHistory(firsts, docsWithHashes, h, Seq("sz", "prefix_hash", "content_hash"))
-      case None    => firsts
-    }
-  }
-
-  /** Drop rows of `batch` whose `keys` appear in `history`, with HISTORY
-    * NEVER SHUFFLED: semi-join history against the broadcast key set of
-    * `keySource`, so history is scanned map-side, column-pruned,
-    * exchange-free — then anti-join the batch against the broadcast hit set.
-    * The earlier `history.distinct()` + left_anti shape shuffled and
-    * aggregated the ENTIRE accumulated history every round (linear growth
-    * with crawl age — VERDICT r2 Performance #3); left_anti is
-    * duplicate-tolerant, so the distinct was pure waste.
-    *
-    * `keySource` is the dedup function's own INPUT frame, of which `batch`
-    * (the step's keep-first survivors) is a subset. The hit set
-    * `history ⋉ keySource` is then a superset of `history ⋉ batch`, and the
-    * extra hits carry keys no `batch` row has, so the anti-join drops
-    * exactly the same rows. What it buys is plan size: taking the keys from
-    * `batch` itself referenced each step's input twice, so the four chained
-    * D2/D3 steps grew the optimized plan as 2^k (31 leaves on the
-    * HistoryPlanSpec fixture); with a fixed key source each step adds a
-    * constant number of leaves (15 in all).
-    *
-    * The broadcast hints are deliberate and SAFE here (unlike the seen-set
-    * hit path, where rediscovery rate is unbounded): `keySource` is this
-    * round's doc batch — politeness-bounded by construction — and `hits` is
-    * a subset of it. Without the hint, Catalyst's post-window stats make it
-    * plan a sort-merge join whose map side shuffle-WRITES the whole history
-    * before AQE's late broadcast conversion can kick in (caught by
-    * HistoryPlanSpec, which walks the final adaptive plan). */
-  private def antiHistory(
-      batch: DataFrame, keySource: DataFrame, history: DataFrame, keys: Seq[String]): DataFrame = {
-    val sourceKeys = keySource.select(keys.map(col): _*)
-    val hits = history.select(keys.map(col): _*)
-      .join(broadcast(sourceKeys), keys, "left_semi")
-    batch.join(broadcast(hits), keys, "left_anti")
-  }
+      arrival: Seq[Column]): DataFrame =
+    dedupCascade(docsWithHashes, Seq(ContentKey), history, arrival)
 
   /** Per-rendering hash column name in the docs table. */
   def renderHashCol(rendering: String): String = s"render_hash_$rendering"
@@ -295,29 +348,19 @@ object Dedup {
     * rendering k+1. Returns the kept rows, with the render-hash columns
     * retained (they ARE the history the caller persists).
     *
-    * `docs` must carry a `spans` column; `history` (if any) must carry the
-    * [[renderHashCol]] columns; `arrival` is the keep-first total order.
+    * `docs` must carry a `spans` column or the [[renderHashCol]] columns
+    * (narrow-frame path: spans were dropped); `history` (if any) must carry
+    * the [[renderHashCol]] columns; `arrival` is the keep-first total order.
     */
   def renderingDedup(
       docs: DataFrame,
       renderings: Seq[String],
       history: Option[DataFrame],
-      arrival: Seq[Column]): DataFrame = {
-    // reuse precomputed hash columns (narrow-frame path: spans were dropped)
-    val hashed =
-      if (renderings.forall(r => docs.columns.contains(renderHashCol(r)))) docs
-      else withRenderHashes(docs, renderings)
-    // every step's history hits come from `hashed` (the input), not from the
-    // previous step's survivors — see antiHistory
-    renderings.foldLeft(hashed) { (kept, r) =>
-      val hc = renderHashCol(r)
-      val w = Window.partitionBy(col(hc)).orderBy(arrival: _*)
-      val firsts = kept.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      history match {
-        case Some(h) => antiHistory(firsts, hashed, h, Seq(hc))
-        case None    => firsts
-      }
-    }
-  }
+      arrival: Seq[Column]): DataFrame =
+    dedupCascade(withRenderHashesIfMissing(docs, renderings),
+      renderings.map(renderingKey), history, arrival)
+
+  private def withRenderHashesIfMissing(docs: DataFrame, renderings: Seq[String]): DataFrame =
+    if (renderings.forall(r => docs.columns.contains(renderHashCol(r)))) docs
+    else withRenderHashes(docs, renderings)
 }

@@ -297,6 +297,8 @@ object SeenSet {
   private final class ProbeFilters(val token: String) {
     val blooms = new java.util.concurrent.ConcurrentHashMap[Int, Option[BloomFilter]]()
     val cuckoos = new java.util.concurrent.ConcurrentHashMap[Int, Option[CuckooFilter]]()
+    /** Set by [[releaseProbeFilters]]: a probe holding these fetches anew. */
+    @volatile var released = false
   }
 
   /** JVM-wide: the filters of the latest call whose token a probe task
@@ -310,15 +312,34 @@ object SeenSet {
     liveFilters
   }
 
+  /** Drop this JVM's probe filters; a probe under any token, the last one
+    * included, then loads the files afresh. The crawler calls it at round
+    * end: the next round's [[markDupes]] mints a new token and reloads them
+    * anyway, so holding them between rounds only pins ~1.3 MB per bloom
+    * shard plus the cuckoo buckets. It acts on the JVM that calls it — in
+    * local mode the whole engine; executor JVMs keep their one generation
+    * until the next call's token replaces it. */
+  def releaseProbeFilters(): Unit = synchronized {
+    if (liveFilters != null) liveFilters.released = true
+    liveFilters = null
+  }
+
   /** Combined bloom→cuckoo membership probe over the JVM-wide filters of its
     * call's `token`. A plain Scala UDF (not codegen) is acceptable: bloom
     * probes are in-memory bit tests and cuckoo probes run only on the
     * bloom-positive slice. */
   private final class SeenProbe(dir: String, buckets: Int, token: String)
       extends (Long => Boolean) with Serializable {
-    // resolved once per task: later tokens cannot swap filters under it
-    @transient private lazy val filters = probeFilters(token)
+    // resolved once per task (later tokens cannot swap filters under it),
+    // and again only after a release; a task holds its own instance, but a
+    // probe the optimizer folds on the driver reuses one across queries
+    @transient private var held: ProbeFilters = null
+    private def filters: ProbeFilters = {
+      if (held == null || held.released) held = probeFilters(token)
+      held
+    }
     def apply(h: Long): Boolean = {
+      val filters = this.filters
       val b = (((h % buckets) + buckets) % buckets).toInt
       // absent shard bloom = nothing recorded for the range → conservative
       // maybe-seen only if the cuckoo bucket says so (both absent → exact

@@ -3,7 +3,8 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style snapshot layout emulated on parquet + a manifest commit (no
   * Iceberg jar ships in this sandbox — SURVEY.md §4). Semantics kept so a real
@@ -23,7 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `round=` does the incremental-read work;
   *  - full tables (frontier) are rewritten each round and read from the
   *    latest committed round only;
-  *  - row counts come from parquet footers (driver metadata IO, no jobs).
+  *  - row counts come from parquet footers (driver metadata IO, no jobs);
+  *  - every read takes the table's declared schema when the caller has one
+  *    (`round` included, as [[readDeltas]] returns it): parquet schema
+  *    inference is a Spark job per read, even for one file.
   */
 object Snapshots {
 
@@ -93,9 +97,18 @@ object Snapshots {
     footerCount(tablePath(dir, round, name))
   }
 
+  /** A reader that takes `schema` instead of inferring one. */
+  private def reader(spark: SparkSession, schema: Option[StructType]): DataFrameReader =
+    schema.fold(spark.read)(spark.read.schema(_))
+
+  /** `schema` without the `round` column: the layout of one round's files. */
+  private def roundFiles(schema: Option[StructType]): Option[StructType] =
+    schema.map(s => StructType(s.fields.filter(_.name != "round")))
+
   /** Read back one (possibly not-yet-committed) table partition of a round. */
-  def readTable(spark: SparkSession, dir: String, round: Int, name: String): DataFrame =
-    spark.read.parquet(tablePath(dir, round, name))
+  def readTable(spark: SparkSession, dir: String, round: Int, name: String,
+      schema: Option[StructType] = None): DataFrame =
+    reader(spark, roundFiles(schema)).parquet(tablePath(dir, round, name))
 
   /** Commit a round whose tables were already written via [[writeTable]]:
     * atomic manifest rename makes them visible. */
@@ -132,17 +145,19 @@ object Snapshots {
   }
 
   /** Latest committed version of a full (rewritten-per-round) table. */
-  def readLatest(spark: SparkSession, dir: String, table: String): Option[DataFrame] =
+  def readLatest(spark: SparkSession, dir: String, table: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
     committedRounds(dir).reverse
       .find(r => Files.exists(Paths.get(tablePath(dir, r, table))))
-      .map(r => spark.read.parquet(tablePath(dir, r, table)))
+      .map(r => readTable(spark, dir, r, table, schema))
 
   /** Union of all committed partitions of a delta table (empty → None). The
     * `round` column is recovered by partition inference via basePath. When a
     * compacted base exists ([[compact]]), the union is base + the delta tail
     * with `round > upto` — file listing, footer reads, and plan size stay
     * O(tail), not O(rounds). */
-  def readDeltas(spark: SparkSession, dir: String, table: String): Option[DataFrame] = {
+  def readDeltas(spark: SparkSession, dir: String, table: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val segs = currentSegments(dir, table)
     val upto = segs.lastOption.map(_._2).getOrElse(0)
     val paths = committedRounds(dir)
@@ -151,11 +166,11 @@ object Snapshots {
       .map(r => tablePath(dir, r, table))
     val tail =
       if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", tableRoot(dir, table)).parquet(paths: _*))
+      else Some(reader(spark, schema).option("basePath", tableRoot(dir, table)).parquet(paths: _*))
     if (segs.isEmpty) tail
     else {
       // one multi-path read over all segments (same schema by construction)
-      val base = spark.read.parquet(segs.map(_._3): _*)
+      val base = reader(spark, schema).parquet(segs.map(_._3): _*)
       tail match {
         case Some(t) =>
           Some(base.unionByName(
@@ -274,7 +289,8 @@ object Snapshots {
     * reached. The `round` column is preserved as a physical column
     * (partition inference recovers it for tail deltas; segments carry it
     * directly). No-op when there is nothing new to fold in. */
-  def compact(spark: SparkSession, dir: String, table: String, upToRound: Int): Unit = {
+  def compact(spark: SparkSession, dir: String, table: String, upToRound: Int,
+      schema: Option[StructType] = None): Unit = {
     gcOrphans(dir, table)
     val segs = currentSegments(dir, table)
     val segUpto = segs.lastOption.map(_._2).getOrElse(0)
@@ -283,11 +299,11 @@ object Snapshots {
       .filter(r => Files.exists(Paths.get(tablePath(dir, r, table))))
     if (deltaRounds.isEmpty) return
     val deltaPaths = deltaRounds.map(r => tablePath(dir, r, table))
-    val deltas = spark.read.option("basePath", tableRoot(dir, table))
+    val deltas = reader(spark, schema).option("basePath", tableRoot(dir, table))
       .parquet(deltaPaths: _*)
     if (segs.size + 1 > MaxSegments) {
       // full merge: every segment + the delta tail → seg=1-upTo
-      val segDfs = segs.map(s => spark.read.parquet(s._3))
+      val segDfs = segs.map(s => reader(spark, schema).parquet(s._3))
       val cols = segDfs.head.columns.map(org.apache.spark.sql.functions.col)
       val merged = (segDfs :+ deltas.select(cols.toSeq: _*)).reduce(_ unionByName _)
       val name = s"seg=1-$upToRound"

@@ -211,6 +211,37 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  test("mergedJudgments on a store with no judgments table: empty, merged columns") {
+    // one round over pdf URLs only: no listing, so no judgment is written
+    val d = newWorkDir("pdfonly")
+    val pdfs = (0 until 4).map(r => Synth.pdfUrl(synthCfg, 0,
+      Synth.fileIdOf(synthCfg, 0, Synth.caseIdOf(synthCfg, 0, 0, 1, r))))
+    val frontier = pdfs.toDF("url")
+      .withColumn("canonical_url", Urls.canonicalize($"url"))
+      .withColumn("url_hash", Urls.urlHash($"canonical_url"))
+      .withColumn("host", Urls.host($"url"))
+      .select($"url", $"canonical_url", $"url_hash", $"host", lit("c").as("court"),
+        lit("q").as("query"), lit(1).as("page"), lit(2).as("depth"),
+        monotonically_increasing_id().as("priority"), lit("pending").as("status"),
+        lit(0).as("retry_count"), lit(0).as("discovered_round"))
+      .as[FrontierEntry]
+    val (report, _, _) = Crawler.runRound(spark, cfg, synthCfg, d, 1, frontier)
+    assert(report.fetched_ok > 0 && report.new_judgments === 0L)
+    assert(Snapshots.readDeltas(spark, d, Crawler.JudgmentsTable).isEmpty)
+    val merged = Crawler.mergedJudgments(spark, d)
+    assert(merged.count() === 0L)
+    assert(merged.columns.toSeq === Crawler.mergedJudgments(spark, mainDir).columns.toSeq)
+  }
+
+  test("declared table schemas equal the schemas inferred from a store's files") {
+    Crawler.TableSchemas.foreach { case (t, declared) =>
+      val inferred = Snapshots.readDeltas(spark, mainDir, t).get.schema
+      assert(declared.toDDL === inferred.toDDL, s"table $t")
+    }
+    assert(Crawler.TableSchemas(Crawler.FrontierTable).fieldNames.toSeq ===
+      spark.emptyDataset[FrontierEntry].columns.toSeq :+ "round")
+  }
+
   test("planted duplicates were actually exercised (fixture is non-trivial)") {
     assert(oracle.mergeRequests.nonEmpty || oracle.judgments.size < synthCfg.totalRows,
       "D1 plants missing")

@@ -5,6 +5,7 @@ import graft.operators.{Dedup, SeenSet, Segregate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,39 +22,46 @@ class HistoryPlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  /** Recursively unwrap AQE wrappers to the materialized plan tree. */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-    case q: QueryStageExec        => q +: flatten(q.plan)
-    case other                    => other +: other.children.flatMap(flatten)
+  /** Recursively unwrap AQE wrappers to the materialized plan tree; with
+    * `caches`, also the plans that filled the caches the tree scans. */
+  private def flatten(p: SparkPlan, caches: Boolean = false): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan, caches)
+    case q: QueryStageExec        => q +: flatten(q.plan, caches)
+    case m: InMemoryTableScanExec if caches =>
+      m +: flatten(m.relation.cacheBuilder.cachedPlan, caches)
+    case other                    => other +: other.children.flatMap(flatten(_, caches))
   }
 
   /** Subtree walk that STOPS at broadcast boundaries: rows below a broadcast
     * exchange are not the rows being shuffled by an enclosing shuffle — they
     * enter the stream only as broadcast-side lookups. */
-  private def shuffleFlow(p: SparkPlan): Seq[SparkPlan] = p match {
+  private def shuffleFlow(p: SparkPlan, caches: Boolean): Seq[SparkPlan] = p match {
     case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => Seq(b)
     case q: org.apache.spark.sql.execution.adaptive.BroadcastQueryStageExec => Seq(q)
-    case a: AdaptiveSparkPlanExec => a +: shuffleFlow(a.executedPlan)
-    case q: QueryStageExec        => q +: shuffleFlow(q.plan)
-    case other                    => other +: other.children.flatMap(shuffleFlow)
+    case a: AdaptiveSparkPlanExec => a +: shuffleFlow(a.executedPlan, caches)
+    case q: QueryStageExec        => q +: shuffleFlow(q.plan, caches)
+    case m: InMemoryTableScanExec if caches =>
+      m +: shuffleFlow(m.relation.cacheBuilder.cachedPlan, caches)
+    case other                    => other +: other.children.flatMap(shuffleFlow(_, caches))
   }
 
   /** True iff some shuffle exchange in `plan` repartitions rows that came
     * from the `pathTag` table other than through a broadcast boundary —
     * i.e. the table's own rows are being shuffled. */
-  private def historyShuffled(df: DataFrame, pathTag: String): Boolean = {
-    df.collect() // force AQE to finalize the real plan
-    val nodes = flatten(df.queryExecution.executedPlan)
-    nodes.exists {
+  private def historyShuffled(plan: SparkPlan, pathTag: String, caches: Boolean): Boolean =
+    flatten(plan, caches).exists {
       case s: ShuffleExchangeLike =>
-        s.children.flatMap(shuffleFlow).exists {
+        s.children.flatMap(shuffleFlow(_, caches)).exists {
           case f: FileSourceScanExec =>
             f.relation.location.rootPaths.exists(_.toString.contains(pathTag))
           case _ => false
         }
       case _ => false
     }
+
+  private def historyShuffled(df: DataFrame, pathTag: String): Boolean = {
+    df.collect() // force AQE to finalize the real plan
+    historyShuffled(df.queryExecution.executedPlan, pathTag, caches = false)
   }
 
   private def scansOf(df: DataFrame, pathTag: String): Seq[FileSourceScanExec] =
@@ -112,6 +120,41 @@ class HistoryPlanSpec extends AnyFunSuite {
     assert(leaves <= 16, s"D2/D3 cascade plan has $leaves leaves (limit 16)")
   }
 
+  test("judgment routing scans the judgments history map-side, column-pruned, never shuffled") {
+    // a real crawl compacting every round: from round 2 on, the judgments
+    // history is the compacted segments under _base, which only the
+    // routing probe reads (compaction reads the round's own delta)
+    val captured = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        captured.synchronized { captured += qe.executedPlan }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-judgplan").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.plans.Crawler.run(spark,
+        graft.model.CrawlConfig(budgetPerHost = 8, numPartitions = 4, saltMax = 4, compactEvery = 1),
+        graft.sources.SynthConfig(courts = 2, queriesPerCourt = 2, pagesPerQuery = 4, rowsPerPage = 5),
+        dir, maxRounds = 4)
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = captured.synchronized { captured.toVector }
+    val history = "tables/judgments/_base"
+    val scans = plans.flatMap(flatten(_, caches = true)).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(history)) => f
+    }
+    assert(scans.nonEmpty, "no round read the judgments history")
+    assert(!plans.exists(historyShuffled(_, history, caches = true)),
+      "the judgments history must never enter a shuffle exchange (it grows with crawl age)")
+    scans.foreach { f =>
+      val read = f.requiredSchema.fieldNames.toSet
+      assert(read.subsetOf(Set("case_number", "canonical_url")) && read.size <= 1,
+        s"judgments history scan must read one routing key, read: $read")
+    }
+  }
+
   test("wide-row discipline: spans/payload columns never ride a shuffle exchange in a real crawl") {
     val captured = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -129,7 +172,7 @@ class HistoryPlanSpec extends AnyFunSuite {
       Thread.sleep(3000) // the QueryExecutionListener bus is asynchronous
       val plans = captured.synchronized { captured.toVector }
       assert(plans.nonEmpty, "listener captured no query executions")
-      val offenders = plans.flatMap(flatten).collect {
+      val offenders = plans.flatMap(flatten(_)).collect {
         case s: ShuffleExchangeLike
             if s.output.exists(a => a.name == "spans" || a.name == "payload" || a.name == "doc") =>
           s.output.map(_.name).mkString(",")

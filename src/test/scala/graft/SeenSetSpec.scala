@@ -131,6 +131,38 @@ class SeenSetSpec extends AnyFunSuite {
     assert(dupCount(markA) === 200L)
   }
 
+  test("releaseProbeFilters: a probe under the released token reloads the files") {
+    val buckets = 4
+    def keys(ids: Seq[Long]) =
+      ids.map(i => (i * 2654435761L, s"https://h.example.org/u/$i")).toDF("url_hash", "canonical_url")
+    val first = keys(0L until 100L)
+    val second = keys(100L until 200L)
+    // The local frame's probe is folded on the driver by the optimizer, the
+    // range frame's runs in tasks.
+    val local = keys(0L until 400L)
+    val ranged = spark.range(400L).select((col("id") * 2654435761L).as("url_hash"),
+      concat(lit("https://h.example.org/u/"), col("id")).as("canonical_url"))
+    Seq(local, ranged).foreach { incoming =>
+      val dir = Files.createTempDirectory("seenrelease").toString
+      SeenSet.rebuildFilters(first, dir, buckets)
+      // the exact table holds both key sets, the filters only the first: a
+      // probe flags the second set only once it reads filters holding it
+      val marked = SeenSet.markDupes(incoming, first.union(second), dir, buckets,
+        probeRepartition = false, seenKeysUnique = true)
+      def dups = marked.filter(col("__dup")).count()
+      assert(dups === 100L)
+      SeenSet.addToFilters(second, dir, buckets)
+      SeenSet.addToBloom(second, dir, buckets)
+      // same call, same token: served the filters loaded before the update
+      assert(dups === 100L)
+      SeenSet.releaseProbeFilters()
+      // same token after the release: the files as they are now
+      assert(dups === 200L, "a probe after the release must not be served the released filters")
+      SeenSet.releaseProbeFilters() // releasing nothing is a no-op
+      assert(dups === 200L)
+    }
+  }
+
   test("hash-collision safety: same url_hash, different canonical_url is NOT a dup") {
     val dir = Files.createTempDirectory("seencol").toString
     val seen = Seq((42L, "https://a.example.org/x")).toDF("url_hash", "canonical_url")
