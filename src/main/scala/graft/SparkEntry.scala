@@ -1,11 +1,11 @@
 package graft
 
-import graft.functions.{TextFunctions => TF, Urls}
+import graft.functions.{TextFunctions => TF, Urls, WireFunctions, WireParagraphsExpr}
 import graft.model.Doc
 import graft.operators.{Dedup, Multimodal, Segregate, Similarity}
 import graft.sources.{Synth, SynthConfig}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -529,10 +529,16 @@ object SparkEntry {
         length(Segregate.renderMarked(col("spans"))).as("marked_len"))
     }),
 
-    "q_segregate" -> ((s, dir) => {
-      import s.implicits._
-      Segregate.paragraphs(synthDocs(s).as[Doc]).toDF()
-    }),
+    "q_segregate" -> ((s, dir) =>
+      // the crawl's streaming W1 fold, unfiltered (both thresholds 0)
+      synthDocs(s)
+        .select(col("doc_id"), lit("plain").as("extractor"),
+          explode(GraftExpressionBridge.column(WireParagraphsExpr(
+            GraftExpressionBridge.expression(WireFunctions.spansPayload(col("spans"))),
+            minSents = 0, minWords = 0))).as("p"))
+        .select(col("doc_id"), col("extractor"), col("p.page").as("page"),
+          col("p.paragraph_number").as("paragraph_number"), col("p.content").as("content"),
+          col("p.reference").as("reference"))),
 
     "q_sc_nested" -> ((s, dir) => {
       // S3: nested-struct scan (petitioner/respondent structs + bench array)
@@ -553,16 +559,19 @@ object SparkEntry {
 
     "q_w1_relational" -> ((s, dir) =>
       // W1(b): the same paragraph fold as a pure window/groupBy plan —
-      // cross-checks the typed fold through an independent DuckDB oracle
+      // cross-checks the streaming fold through an independent DuckDB oracle
       Segregate.paragraphsRelational(synthDocs(s))),
 
     "q_rendering_dedup" -> ((s, dir) => {
       // output is (doc_id, sz) — hash-free, so the D2→D3 cascade is EXACTLY
       // oracle-checkable: DuckDB replicates the chain on the rendering
       // STRINGS themselves (equal strings ⇔ equal hashes w.h.p., and the
-      // oracle proves the grouping, survivor choice, and chain order)
-      val docs = synthDocs(s)
-      val hashed = Dedup.withStagedHashes(docs)
+      // oracle proves the grouping, survivor choice, and chain order). The
+      // hashes are the docs table's own identity, the crawl's kernel.
+      val hashed = synthDocs(s)
+        .select(col("doc_id"),
+          WireFunctions.docHashesStruct(WireFunctions.spansPayload(col("spans"))).as("h"))
+        .select(col("doc_id"), col("h.*"))
       val kept = Dedup.contentDedup(hashed, None, Seq(col("doc_id")))
       val survivors = Dedup.renderingDedup(
         kept, Segregate.RenderingNames, None, Seq(col("doc_id")))
@@ -1105,7 +1114,7 @@ object SparkEntry {
 
   /** The W1 paragraph fold as portable SQL (same derivation as
     * [[graft.operators.Segregate.paragraphsRelational]]) — the oracle for BOTH
-    * q_segregate (typed fold) and q_w1_relational (relational plan). */
+    * q_segregate (streaming fold) and q_w1_relational (relational plan). */
   private def segregateOracleSql: String =
     s"""WITH sp AS (
        |  SELECT doc_id, s.kind AS kind, s.text AS text, s."offset" AS off

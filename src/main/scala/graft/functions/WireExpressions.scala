@@ -10,7 +10,7 @@ import graft.sources.SynthConfig
 
 /** Native codegen expressions over the [[graft.sources.Wire]] fetch payload.
   *
-  * Both exist for the same reason as the sketch kernels: the hot crawl path
+  * They exist for the same reason as the sketch kernels: the hot crawl path
   * must stay inside whole-stage codegen with near-zero allocation. The
   * round-3 plan re-scanned the fetch_log payload column three times after the
   * fetch (hash scan, docs-write decode, paragraph decode) and decoded spans
@@ -18,7 +18,8 @@ import graft.sources.SynthConfig
   * measured 223 cpu-s with 45 s of GC at local[32]. Hash-at-fetch computes the
   * identity columns WHILE the payload bytes are in hand (zero extra reads);
   * the spans decode emits `UTF8String` slices of the payload array (zero
-  * copy) straight as Catalyst rows.
+  * copy) straight as Catalyst rows. The queries reach the same doc-hash and
+  * paragraph kernels by re-encoding a `spans` column ([[SpansPayloadExpr]]).
   */
 object WireExpressions {
 
@@ -98,9 +99,10 @@ case class SynthFetchExpr(left: Expression, right: Expression,
 }
 
 /** `docHashesStruct(payload)` — the D2/D3 identity columns computed straight
-  * off the Wire payload bytes (struct, null when the payload carries no doc).
-  * Pinned bit-equal to the object path in HashingSpec via
-  * [[graft.sources.Wire.docHashesStreaming]]. */
+  * off the Wire payload bytes (struct, null when the payload carries no doc)
+  * by [[graft.sources.Wire.docHashesStreaming]], the one identity: the docs
+  * table stores it and `q_rendering_dedup` computes it over
+  * `spansPayload(spans)`. */
 case class WireDocHashesExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = WireExpressions.DocHashesSchema
   override def nullable: Boolean = true
@@ -139,23 +141,48 @@ case class WireSpansExpr(child: Expression) extends UnaryExpression {
   * removes the tail's dedicated full-payload re-scan: the paragraphs write
   * then reads only this (column-pruned) array column plus doc_id — at the
   * mega-wave scale that re-scan was 16 GB + ~700 task launches per round.
-  * Null when the payload carries no doc. Row content is pinned equal to the
-  * typed object path through the shared streaming fold (HashingSpec). */
-case class WireParagraphsExpr(child: Expression, extractor: String = "plain",
+  * Null when the payload carries no doc. `q_segregate` runs it unfiltered
+  * (both thresholds 0) over [[SpansPayloadExpr]]. Row content is pinned
+  * equal to the typed object-path oracle in HashingSpec. */
+case class WireParagraphsExpr(child: Expression,
     minSents: Int = 3, minWords: Int = 30) extends UnaryExpression {
   override def dataType: DataType =
     ArrayType(WireExpressions.ParagraphSchema, containsNull = false)
   override def nullable: Boolean = true
   override def nullSafeEval(input: Any): Any =
-    graft.sources.Wire.paragraphsArrayData(
-      input.asInstanceOf[Array[Byte]], extractor, minSents, minWords)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ext = ctx.addReferenceObj("extractor", extractor, "java.lang.String")
+    graft.sources.Wire.paragraphsArrayData(input.asInstanceOf[Array[Byte]], minSents, minWords)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.sources.Wire.paragraphsArrayData($c, $ext, $minSents, $minWords);
+      ${ev.value} = graft.sources.Wire.paragraphsArrayData($c, $minSents, $minWords);
       ${ev.isNull} = ${ev.value} == null;
     """)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `spansPayload(spans)` — a `spans` column (the [[WireExpressions.SpanSchema]]
+  * fields, by name and type) written as a Wire payload
+  * ([[graft.sources.Wire.spansPayload]]), so the queries reach the same
+  * doc-hash and paragraph kernels the crawl runs on its fetch payloads. */
+case class SpansPayloadExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    def shape(t: StructType) = t.fields.toSeq.map(f => (f.name, f.dataType))
+    child.dataType match {
+      case ArrayType(t: StructType, _) if shape(t) == shape(WireExpressions.SpanSchema) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other =>
+        TypeCheckResult.TypeCheckFailure(
+          s"spansPayload needs ARRAY<${WireExpressions.SpanSchema.sql}>, got ${other.sql}")
+    }
   }
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = true
+  override def nullSafeEval(input: Any): Any =
+    graft.sources.Wire.spansPayload(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.sources.Wire.spansPayload($c);")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -168,6 +195,7 @@ object WireFunctions {
   def docHashesStruct(payload: Column): Column = c(WireDocHashesExpr(e(payload)))
   def wireSpans(payload: Column): Column = c(WireSpansExpr(e(payload)))
   def wireParagraphs(payload: Column): Column = c(WireParagraphsExpr(e(payload)))
+  def spansPayload(spans: Column): Column = c(SpansPayloadExpr(e(spans)))
   def synthFetch(url: Column, retryCount: Column, cfg: SynthConfig,
       minIntervalMicros: Long): Column =
     c(SynthFetchExpr(e(url), e(retryCount), cfg, minIntervalMicros))

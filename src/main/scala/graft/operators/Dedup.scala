@@ -19,23 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Staged content-identity columns (cheap → expensive), the scaled analog of
-    * size → 1 KiB-prefix SHA-1 → full SHA-1 (`preprocess.py:66-84,186-197`).
-    * At 100 TB the win is that `sz`+`prefix_hash` come from tiny reads while
-    * `content_hash` needs the full payload; Spark computes all three per row
-    * in one pass here, but grouping on (sz, prefix_hash, content_hash)
-    * preserves the short-circuit semantics: rows differing in a cheap column
-    * can never be content-dupes. */
-  def withStagedHashes(docs: DataFrame, spansCol: String = "spans"): DataFrame = {
-    val spans = col(spansCol)
-    docs
-      .withColumn("sz",
-        aggregate(spans, lit(0L), (acc, s) =>
-          acc + coalesce(length(s("text")).cast("long"), lit(256L))))
-      .withColumn("prefix_hash", xxhash64(to_json(element_at(spans, 1))))
-      .withColumn("content_hash", xxhash64(to_json(spans)))
-  }
-
   /** Keep-first distinct by `key` under the total order `arrival`. */
   def keepFirst(df: DataFrame, key: Seq[Column], arrival: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(key: _*).orderBy(arrival: _*)
@@ -44,7 +27,13 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** The staged content identity of D2 (cheap → expensive columns). */
+  /** The staged content identity of D2 (cheap → expensive columns), the
+    * scaled analog of size → 1 KiB-prefix SHA-1 → full SHA-1
+    * (`preprocess.py:66-84,186-197`). At 100 TB the win is that `sz` and
+    * `prefix_hash` come from tiny reads while `content_hash` needs the full
+    * payload; the kernel computes all three in one pass, but grouping on the
+    * triple preserves the short-circuit semantics: rows differing in a cheap
+    * column can never be content-dupes. */
   val ContentKey: HistoryKey = HistoryKey("content", Seq("sz", "prefix_hash", "content_hash"))
 
   /** The D3 identity of one rendering: its hash column. */
@@ -153,11 +142,22 @@ object Dedup {
   /** Per-rendering hash column name in the docs table. */
   def renderHashCol(rendering: String): String = s"render_hash_$rendering"
 
-  /** Narrow per-doc identity row — everything D2/D3 needs, ~150 B/row.
-    * Field names match the staged/render hash column names. Content and
-    * rendering identities are 128-bit (hex): at the 10^10-doc design point a
-    * 64-bit key sees birthday collisions (~2^32 docs), which for D2/D3 means
-    * silently DROPPING a unique document. */
+  /** Narrow per-doc identity row — everything D2/D3 needs, ~150 B/row —
+    * computed by `Wire.docHashesStreaming`, the one production definition.
+    * Field names match the staged/render hash column names. Hash
+    * definitions, over the spans in offset order:
+    *   sz           = Σ len(text) in UTF-16 units (256 for a null text) — the
+    *                  cheap stage
+    *   prefix_hash  = the content hash's first 64-bit lane after the first
+    *                  span — the 1 KiB-prefix analog (`preprocess.py:66-84`)
+    *   content_hash = 128-bit streaming hash over all span fields
+    *                  (field/presence delimiters included)
+    *   render_hash_<r> = 128-bit streaming hash of exactly the chars of the
+    *                  rendering string (equal strings ⇔ equal hashes w.h.p.)
+    * The 128-bit hashes are two independent 64-bit FNV-1a lanes, folded char
+    * by char so no rendering string is ever built. 128 bits because at the
+    * 10^10-doc design point a 64-bit key sees birthday collisions (~2^32
+    * docs), which for D2/D3 means silently DROPPING a unique document. */
   final case class DocHashes(
       doc_id: String,
       priority: Long,
@@ -169,38 +169,9 @@ object Dedup {
       render_hash_nodigits: String,
       render_hash_marked: String)
 
-  /** Two independent 64-bit FNV-1a lanes ≈ one streaming 128-bit identity.
-    * A streaming hash (vs xxhash64-of-built-string) is the point: the doc
-    * kernel below never materializes a rendering string — it folds chars
-    * straight into the lanes. */
-  private[graft] final class Fnv128 {
-    private var h1 = 0xcbf29ce484222325L
-    private var h2 = 0x6c62272e07bb0142L
-    @inline def update(c: Char): Unit = {
-      h1 = (h1 ^ c) * 0x100000001b3L
-      h2 = (h2 ^ c) * 0x9e3779b97f4a7c15L
-    }
-    def updateStr(s: String): Unit = {
-      var i = 0
-      while (i < s.length) { update(s.charAt(i)); i += 1 }
-    }
-    def hex: String = {
-      // manual zero-padded hex: the f"%016x" interpolator routes through
-      // String.format (runtime format-string parsing — measured hot)
-      val out = new Array[Char](32)
-      var i = 0
-      while (i < 16) {
-        out(15 - i) = Character.forDigit(((h1 >>> (i * 4)) & 0xF).toInt, 16)
-        out(31 - i) = Character.forDigit(((h2 >>> (i * 4)) & 0xF).toInt, 16)
-        i += 1
-      }
-      new String(out)
-    }
-    def lane1: Long = h1
-  }
-
-  /** [[Fnv128.hex]] for lane values held as plain longs (the streaming
-    * kernel keeps its lanes in locals/scratch, not Fnv128 objects). */
+  /** Zero-padded 32-digit hex of a two-lane hash. Manual: the f"%016x"
+    * interpolator routes through String.format (runtime format-string
+    * parsing — measured hot). */
   private[graft] def fnvHex(h1: Long, h2: Long): String = {
     val out = new Array[Char](32)
     var i = 0
@@ -219,8 +190,8 @@ object Dedup {
     * supplementary-plane numeral (e.g. U+10107 AEGEAN NUMBER ONE, a
     * surrogate pair) is NOT stripped — its surrogates type as SURROGATE —
     * whereas the Column rendering's code-point regex would strip it. The
-    * typed kernel is the production hash definition (HashingSpec pins
-    * streaming ≡ object path on supplementary-plane inputs); the divergence
+    * streaming kernel is the production hash definition (HashingSpec pins
+    * it ≡ the object-path oracle on supplementary-plane inputs); the divergence
     * from the Column regexp on non-BMP numerals only loosens the nodigits
     * COLLISION space (two docs differing in Aegean numerals hash apart
     * instead of together), never correctness of exact identity. */
@@ -234,73 +205,6 @@ object Dedup {
       t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
         t == Character.OTHER_NUMBER
     }
-
-  /** Typed hash kernel: ONE traversal over the spans, zero string building.
-    * Runs inside the fetch stage while the spans are live objects
-    * (hash-at-ingest) — the earlier build-3-rendering-strings-then-hash
-    * version cost ~0.5 ms/doc in allocations alone and dominated the crawl
-    * round's CPU at local[32]. Hash definitions:
-    *   sz           = Σ len(text) (256 for media spans) — the cheap stage
-    *   prefix_hash  = FNV64 over the first span's fields — the 1 KiB-prefix
-    *                  analog (`preprocess.py:66-84`)
-    *   content_hash = 128-bit streaming hash over all span fields in offset
-    *                  order (field/presence delimiters included)
-    *   render_hash_<r> = 128-bit streaming hash of exactly the chars of the
-    *                  rendering string (equal strings ⇔ equal hashes w.h.p.;
-    *                  pinned vs the string renderings in HashingSpec)
-    */
-  def docHashes(docId: String, priority: Long, court: String, spans: Seq[graft.model.Span]): DocHashes = {
-    val sorted = Segregate.sortedByOffset(spans)
-    var sz = 0L
-    val content = new Fnv128
-    val plain = new Fnv128
-    val nodigits = new Fnv128
-    val marked = new Fnv128
-    var prefix = 0L
-    var firstSeen = false
-    var firstPiece = true
-    val it = sorted.iterator
-    while (it.hasNext) {
-      val s = it.next()
-      sz += (if (s.text != null) s.text.length.toLong else 256L)
-      // content identity over all fields, with presence/field delimiters
-      content.updateStr(s.kind); content.update(0)
-      if (s.text != null) content.updateStr(s.text)
-      content.update(1)
-      if (s.media_ref != null) content.updateStr(s.media_ref)
-      content.update(2)
-      content.update((s.offset & 0xFFFF).toChar)
-      content.update(((s.offset >> 16) & 0xFFFF).toChar)
-      if (!firstSeen) {
-        firstSeen = true
-        prefix = content.lane1 // prefix stage = content lane after span 1
-      }
-      // renderings: text+heading spans joined with "\n\n" (tables/images
-      // skipped); "null" for null text matches the mkString semantics of the
-      // string renderings (Segregate.renderPlainStr)
-      if (s.kind == "text" || s.kind == "heading") {
-        if (!firstPiece) {
-          plain.update('\n'); plain.update('\n')
-          nodigits.update('\n'); nodigits.update('\n')
-          marked.update('\n'); marked.update('\n')
-        }
-        firstPiece = false
-        val text = if (s.text == null) "null" else s.text
-        if (s.kind == "heading") marked.updateStr("[Heading]\n")
-        else if (s.text != null && Segregate.starterFind(s.text)) marked.updateStr("[Paragraph]\n")
-        var i = 0
-        while (i < text.length) {
-          val c = text.charAt(i)
-          plain.update(c)
-          if (!isNumberChar(c)) nodigits.update(c)
-          marked.update(c)
-          i += 1
-        }
-      }
-    }
-    DocHashes(docId, priority, court, sz, prefix, content.hex,
-      plain.hex, nodigits.hex, marked.hex)
-  }
 
   /** Near-duplicate dedup over a text column — the crawl-side "D4" stage a
     * training-data pipeline chains after exact content dedup (reference
@@ -334,12 +238,6 @@ object Dedup {
     docs.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Add one hash column per rendering (computed in a single projection —
-    * these are the D3 history the docs table carries). */
-  def withRenderHashes(docs: DataFrame, renderings: Seq[String]): DataFrame =
-    renderings.foldLeft(docs)((d, r) =>
-      d.withColumn(renderHashCol(r), xxhash64(Segregate.rendering(r, col("spans")))))
-
   /** D3: chained per-rendering dedup. For each rendering name (in declared
     * order — order-sensitivity is golden-tested against the reference,
     * `process.py:114-122`, `tests/test_process.py:46-135`): drop rows whose
@@ -348,19 +246,20 @@ object Dedup {
     * rendering k+1. Returns the kept rows, with the render-hash columns
     * retained (they ARE the history the caller persists).
     *
-    * `docs` must carry a `spans` column or the [[renderHashCol]] columns
-    * (narrow-frame path: spans were dropped); `history` (if any) must carry
-    * the [[renderHashCol]] columns; `arrival` is the keep-first total order.
+    * `docs` and `history` (if any) must carry the [[renderHashCol]]
+    * columns of the docs identity ([[DocHashes]], e.g.
+    * `docHashesStruct(spansPayload(spans))`); `arrival` is the keep-first
+    * total order. A frame with another identity could never match the docs
+    * history, so missing columns are an error, not a recomputation.
     */
   def renderingDedup(
       docs: DataFrame,
       renderings: Seq[String],
       history: Option[DataFrame],
-      arrival: Seq[Column]): DataFrame =
-    dedupCascade(withRenderHashesIfMissing(docs, renderings),
-      renderings.map(renderingKey), history, arrival)
-
-  private def withRenderHashesIfMissing(docs: DataFrame, renderings: Seq[String]): DataFrame =
-    if (renderings.forall(r => docs.columns.contains(renderHashCol(r)))) docs
-    else withRenderHashes(docs, renderings)
+      arrival: Seq[Column]): DataFrame = {
+    val missing = renderings.map(renderHashCol).filterNot(docs.columns.contains)
+    require(missing.isEmpty,
+      s"renderingDedup: docs lack the rendering hash columns ${missing.mkString(", ")}")
+    dedupCascade(docs, renderings.map(renderingKey), history, arrival)
+  }
 }

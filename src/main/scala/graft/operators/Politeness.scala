@@ -102,15 +102,9 @@ final case class FetchEvent(
 object Politeness {
 
   /** Assign salts from this round's host frequencies and pick the top-budget
-    * entries per (host, salt) bucket. Returns scheduled ∪ deferred. */
-  def schedule(novel: Dataset[FrontierEntry], cfg: CrawlConfig): Dataset[Sched] = {
-    val spark = novel.sparkSession
-    import spark.implicits._
-    scheduleFlagged(novel.toDF().withColumn("__drop", lit(null).cast("string")), cfg)
-  }
-
-  /** [[schedule]] over a frame that also carries D1/robots rejects: rows with
-    * a non-null `__drop` reason pass straight through the scheduling shuffle
+    * entries per (host, salt) bucket; returns scheduled ∪ deferred. The
+    * frame also carries D1/robots rejects: rows with a non-null `__drop`
+    * reason pass straight through the scheduling shuffle
     * (no heap admission) and come out as `Sched(entry.copy(status = reason),
     * scheduled = false)`. This lets the crawler take EVERY per-round count
     * (scheduled / deferred / dup / robots) from ONE aggregate over the sched

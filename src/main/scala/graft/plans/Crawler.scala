@@ -51,7 +51,7 @@ final case class RoundReport(
   *     probe projection + exact join on the probe-positive slice
   *     ([[SeenSet.markDupes]]);
   *  2. politeness scheduling: salted host buckets + bounded per-bucket
-  *     priority queues ([[Politeness.schedule]]) — overflow is *deferred*, not
+  *     priority queues ([[Politeness.scheduleFlagged]]) — overflow is *deferred*, not
   *     dropped;
   *  3. deterministic fetch ([[Politeness.fetchAll]]); transient failures are
   *     re-enqueued with `retry_count+1` up to `maxRetries`
@@ -313,6 +313,11 @@ object Crawler {
         when($"__dup", lit("dup")).when($"__robots_denied", lit("robots")))
       .select((fCols.map(col) :+ $"__drop"): _*)
       .persist()
+    // Fill the cache with one action before scheduling: the scheduling query
+    // reads `flagged` twice (host counts and slotted rows), and two tasks
+    // racing to fill the same cache block leave one idle until the other
+    // finishes ("Block rdd_N_0 already exists").
+    named("d1-probe")(flagged.count())
 
     // ---- politeness scheduling + fetch ----
     // Scheduling counters ride the scheduling mapPartitions as accumulators
@@ -593,8 +598,8 @@ object Crawler {
     // ---- docs: D2 + D3 + segregation ----
     // Wide-row discipline: the span payload never enters a shuffle and is
     // only decoded twice — once STREAMED through the hash kernel
-    // (Dedup.docHashes over Wire-decoded spans, ~80 µs/doc), and once for
-    // dedup SURVIVORS at the docs-table write. The D2/D3 keep-first windows
+    // (Wire.docHashesStreaming over the payload bytes, at fetch), and once
+    // for dedup SURVIVORS at the docs-table write. The D2/D3 keep-first windows
     // and the history probe run on the NARROW hash frame (~150 B/row), and
     // the surviving doc_ids are broadcast back onto the payload rows
     // (docs-per-round is politeness-bounded, so the survivor set is always

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{ByteArrayInputStream, DataInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.model.{Doc, Span}
+import graft.model.Doc
 
 /** Compact binary codec for the fetch payload (discoveries + doc spans).
   *
@@ -36,7 +36,7 @@ object Wire {
   final class CorruptPayloadException(msg: String, cause: Throwable = null)
     extends IllegalArgumentException(msg, cause)
 
-  @inline private def guarded[T](op: String, bytes: Array[Byte])(body: => T): T =
+  @inline private[graft] def guarded[T](op: String, bytes: Array[Byte])(body: => T): T =
     try body catch {
       case e: CorruptPayloadException => throw e
       case e @ (_: IndexOutOfBoundsException | _: java.io.EOFException |
@@ -48,7 +48,7 @@ object Wire {
           s"truncated or corrupt wire payload in $op (${bytes.length} bytes): $e", e)
     }
 
-  @inline private def corrupt(op: String, detail: String): Nothing =
+  @inline private[graft] def corrupt(op: String, detail: String): Nothing =
     throw new CorruptPayloadException(s"corrupt wire payload in $op: $detail")
 
   /** Reusable cursor-writer over a growable byte scratch, emitting exactly
@@ -143,11 +143,22 @@ object Wire {
 
     def putNullStr(): Unit = putInt(-1)
 
+    /** Length-prefixed copy of a Catalyst string's UTF-8 bytes (null → -1). */
+    def putUtf8(s: org.apache.spark.unsafe.types.UTF8String): Unit =
+      if (s == null) putInt(-1)
+      else {
+        val n = s.numBytes()
+        putInt(n)
+        ensure(n)
+        s.writeToMemory(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + p)
+        p += n
+      }
+
     /** One exact-size copy of the written payload. */
     def result(): Array[Byte] = java.util.Arrays.copyOf(b, p)
   }
 
-  @inline private def readStr(in: DataInputStream): String = {
+  @inline private[graft] def readStr(in: DataInputStream): String = {
     val n = in.readInt()
     if (n < 0) null
     else {
@@ -279,7 +290,7 @@ object Wire {
     p - off
   }
 
-  private def open(bytes: Array[Byte]): DataInputStream = {
+  private[graft] def open(bytes: Array[Byte]): DataInputStream = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val v = in.readByte()
     require(v == Version, s"unknown wire version $v")
@@ -307,41 +318,7 @@ object Wire {
     out.toSeq
   }
 
-  /** Decode only the doc (skips over the discovery block). */
-  def decodeDoc(bytes: Array[Byte]): Option[Doc] = guarded("decodeDoc", bytes) {
-    if (bytes == null) return None
-    val in = open(bytes)
-    var n = in.readInt()
-    while (n > 0) { // skip discoveries: 6 strings, 3 ints, 1 long each
-      var s = 0
-      while (s < 3) { skipStr(in); s += 1 }
-      in.skipBytes(16) // page, depth, priority
-      s = 0
-      while (s < 3) { skipStr(in); s += 1 }
-      in.skipBytes(4) // rank
-      n -= 1
-    }
-    if (!in.readBoolean()) None
-    else {
-      val docId = readStr(in)
-      val nSpans = in.readInt()
-      if (nSpans < 0 || nSpans > bytes.length / 16)
-        corrupt("decodeDoc", s"implausible span count $nSpans")
-      val spans = new scala.collection.mutable.ArrayBuffer[Span](nSpans)
-      var i = 0
-      while (i < nSpans) {
-        spans += Span(readStr(in), readStr(in), readStr(in), in.readInt())
-        i += 1
-      }
-      Some(Doc(docId, spans.toSeq))
-    }
-  }
-
-  /** Decode just the spans (for the docs-table write of dedup survivors). */
-  def decodeSpans(bytes: Array[Byte]): Seq[Span] =
-    decodeDoc(bytes).map(_.spans).getOrElse(Nil)
-
-  @inline private def skipStr(in: DataInputStream): Unit = {
+  @inline private[graft] def skipStr(in: DataInputStream): Unit = {
     val n = in.readInt()
     if (n > 0) in.skipBytes(n)
   }
@@ -367,7 +344,7 @@ object Wire {
     * Catalyst [[org.apache.spark.sql.catalyst.util.ArrayData]] whose string
     * fields are `UTF8String.fromBytes` SLICES of the payload array — no Span
     * objects, no String materialization, no re-encode of an object graph
-    * (the round-3 `decodeSpans` UDF path allocated Seq[Span] + Strings per
+    * (the round-3 span-decoding UDF path allocated Seq[Span] + Strings per
     * survivor and re-encoded them through the struct encoder; measured 45 s
     * of GC in the docs-write stage at local[32]). Returns null when the
     * payload carries no doc; field order matches [[graft.model.Span]]. */
@@ -404,63 +381,27 @@ object Wire {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
   }
 
-  /** Survivor-paragraph consumer for [[paragraphsFoldStreaming]] — a trait,
-    * not a Function6, so the per-paragraph emit stays unboxed. `buf` is a
-    * reusable scratch: the slice `[start, start+len)` is only valid inside
-    * the call. */
-  trait ParaSink {
-    def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-        reference: String): Unit
-  }
-
   /** The fetch-projection twin ([[graft.functions.WireFunctions.wireParagraphs]]):
     * survivor paragraphs as Catalyst rows (page, paragraph_number, content,
     * reference), content built straight from the byte scratch. Null when the
     * payload carries no doc — mirrors wireSpans/docHashesStruct. */
-  def paragraphsArrayData(payload: Array[Byte], extractor: String,
+  def paragraphsArrayData(payload: Array[Byte],
       minSents: Int, minWords: Int): org.apache.spark.sql.catalyst.util.ArrayData = guarded("paragraphsArrayData", payload) {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.unsafe.types.UTF8String
     if (payload == null) return null
     if (docBlockStart(payload) < 0) return null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val rc = paragraphsFoldStreaming(payload, minSents, minWords, new ParaSink {
-      def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-          reference: String): Unit =
-        out += new GenericInternalRow(Array[Any](page, seq,
-          // MUST copy: the ParaSink contract says the slice is only valid
-          // inside this call (buf is the reusable fold scratch), and
-          // UTF8String.fromBytes(buf, ..) WRAPS the array — an aliased view
-          // would be overwritten by the next paragraph before Catalyst
-          // copies the returned array into the output row (caught live in
-          // round 4: every row read back as the last paragraph's bytes).
-          // One exact-size copy per filter SURVIVOR, same as the String the
-          // object path materializes.
-          UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, start, start + len)),
-          if (reference == null) null else UTF8String.fromString(reference)))
-    })
-    if (rc == FoldUnsorted) {
-      out.clear()
-      decodeDoc(payload).foreach(d =>
-        graft.operators.Segregate.segregateDoc(d.doc_id, extractor, d.spans)
-          .filter(q => graft.operators.Segregate.sentKeepStr(q.content, minSents, minWords))
-          .foreach(q => out += new GenericInternalRow(Array[Any](q.page, q.paragraph_number,
-            UTF8String.fromString(q.content),
-            if (q.reference == null) null else UTF8String.fromString(q.reference)))))
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      paragraphsFoldStreaming(payload, minSents, minWords))
   }
 
-  private val FoldOk = 0
-  private val FoldUnsorted = 1
-
-  /** The W1 fold + P7/P8 filter streamed off payload bytes; survivors go to
-    * `sink`. Returns [[FoldUnsorted]] when span offsets arrive unsorted (the
-    * hash/fold contract is sort-by-offset — callers then run the object
-    * path; never happens for Synth payloads, whose spans are generated in
+  /** The W1 fold + P7/P8 filter streamed off payload bytes: the surviving
+    * paragraphs' rows. The fold's contract is reading (offset) order; at the
+    * first offset that decreases it starts over on [[inOffsetOrder]]'s
+    * sorted copy (never for Synth payloads, whose spans are generated in
     * reading order). */
-  private def paragraphsFoldStreaming(payload: Array[Byte], minSents: Int, minWords: Int,
-      sink: ParaSink): Int = {
+  private def paragraphsFoldStreaming(payload: Array[Byte], minSents: Int,
+      minWords: Int): Array[Any] = {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
     var p = docBlockStart(payload)
     val docIdLen = readIntAt(payload, p)
     p += 4 + math.max(0, docIdLen) // -1 = null doc_id: no bytes follow
@@ -490,6 +431,7 @@ object Wire {
         clen += n
       }
     }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var hasContent = false
     var reference: String = null
     var open = false
@@ -504,7 +446,15 @@ object Wire {
       while (s0 < e0 && (cbuf(s0) & 0xFF) <= ' ') s0 += 1
       while (e0 > s0 && (cbuf(e0 - 1) & 0xFF) <= ' ') e0 -= 1
       if (graft.operators.Segregate.sentKeepBytes(cbuf, s0, e0, minSents, minWords))
-        sink.emit(pageStart + 1, seq, cbuf, s0, e0 - s0, reference)
+        out += new GenericInternalRow(Array[Any](pageStart + 1, seq,
+          // MUST copy: cbuf is the reusable fold scratch, and
+          // UTF8String.fromBytes(buf, ..) WRAPS the array — an aliased view
+          // would be overwritten by the next paragraph before Catalyst
+          // copies the returned array into the output row (caught live in
+          // round 4: every row read back as the last paragraph's bytes).
+          // One exact-size copy per filter SURVIVOR.
+          UTF8String.fromBytes(java.util.Arrays.copyOfRange(cbuf, s0, e0)),
+          if (reference == null) null else UTF8String.fromString(reference)))
     }
     var i = 0
     while (i < nSpans) {
@@ -515,7 +465,8 @@ object Wire {
       val mediaLen = readIntAt(payload, p)
       p = p + 4 + math.max(mediaLen, 0)
       val offset = readIntAt(payload, p); p += 4
-      if (offset < prevOffset) return FoldUnsorted // honor the sort contract
+      if (offset < prevOffset) // out of reading order: fold the sorted copy
+        return paragraphsFoldStreaming(inOffsetOrder(payload), minSents, minWords)
       prevOffset = offset
 
       val kind = kindOf(payload, kindStart, math.max(kindLen, 0))
@@ -549,8 +500,8 @@ object Wire {
       i += 1
     }
     // no final flush — the trailing open paragraph is dropped (reference
-    // quirk preserved; see Segregate.segregateDoc)
-    FoldOk
+    // quirk preserved, adobe_json.py:33-61)
+    out.toArray
   }
 
   private val paraScratch: ThreadLocal[Array[Byte]] =
@@ -577,9 +528,11 @@ object Wire {
   // payload bytes — no Span objects, no Seq builders, no text Strings. The
   // decode-to-objects path measured 1.8× cpu inflation + 10× GC inflation
   // at 32 threads vs 8 (the allocation bus is the scaling wall); this
-  // kernel's only allocations are the four hash-lane objects and the final
-  // hex strings. Pinned bit-equal to Dedup.docHashes(decodeSpans(payload))
-  // in HashingSpec (incl. supplementary-plane code points).
+  // kernel's only allocations are the lane scratch and the final hex
+  // strings. It is the one D2/D3 identity: the crawl hashes its fetch
+  // payloads with it, the queries hash `spans` columns re-encoded by
+  // [[spansPayload]]. Pinned bit-equal to the typed object-path oracle in
+  // HashingSpec (incl. supplementary-plane code points, unsorted offsets).
   // ---------------------------------------------------------------------
 
   @inline private def readIntAt(b: Array[Byte], p: Int): Int =
@@ -591,9 +544,9 @@ object Wire {
   }
 
   // FNV-1a lane constants (public-domain Fowler–Noll–Vo 64-bit offset basis
-  // and prime; lane 2 is the splitmix64 golden-ratio odd multiplier) — the
-  // same pair Dedup.Fnv128 uses. The streaming kernel keeps its 4 lane pairs
-  // in a long[8] scratch (content, plain, nodigits, marked) and folds chars
+  // and prime; lane 2 is the splitmix64 golden-ratio odd multiplier). The
+  // streaming kernel keeps its 4 lane pairs in a long[8] scratch
+  // (content, plain, nodigits, marked) and folds chars
   // with inline arithmetic: the previous `foreachChar(f: Char => Unit)`
   // shape put a megamorphic, unspecialized (Char boxes through
   // Function1[Object,Object]) virtual call on EVERY char of every fetched
@@ -654,8 +607,8 @@ object Wire {
 
   /** One decode pass over a text span of a render-eligible (text/heading)
     * span, folding each char into ALL FOUR lane pairs — content, plain,
-    * marked unconditionally; nodigits gated on !isNumberChar exactly like
-    * the object path's rendering strip. Returns the char count. */
+    * marked unconditionally; nodigits gated on !isNumberChar, the
+    * nodigits rendering's strip. Returns the char count. */
   private def fnvTextAll(b: Array[Byte], start: Int, end: Int, st: Array[Long]): Int = {
     var c1 = st(0); var c2 = st(1)
     var p1 = st(2); var p2 = st(3)
@@ -735,7 +688,7 @@ object Wire {
         t == Character.OTHER_NUMBER
     }
 
-  /** [[graft.operators.Segregate.starterFind]] on a UTF-8 slice:
+  /** [[graft.operators.Segregate.StarterRegex]] on a UTF-8 slice:
     * `^\p{Z}*\p{N}+\p{Z}*\.` over code points (no backtracking needed —
     * the classes are pairwise disjoint). */
   private def starterAt(b: Array[Byte], start: Int, end: Int): Boolean = {
@@ -820,11 +773,12 @@ object Wire {
     else new String(b, start, len, UTF_8)
   }
 
-  /** Streaming twin of [[graft.operators.Dedup.docHashes]] over the payload
-    * bytes. Returns null when the payload carries no doc. Falls back to the
-    * object path if spans arrive offset-unsorted (never happens for Synth
-    * fetches — spans are generated in reading order — but the hash contract
-    * is sort-by-offset, so the contract is honored either way). */
+  /** The D2/D3 identity of the payload's doc (definitions at
+    * [[graft.operators.Dedup.DocHashes]]). Returns null when the payload
+    * carries no doc. The hash contract is reading (offset) order: at the
+    * first offset that decreases the kernel starts over on
+    * [[inOffsetOrder]]'s sorted copy (never for Synth fetches, whose spans
+    * are generated in reading order). */
   def docHashesStreaming(priority: Long, court: String, payload: Array[Byte]): graft.operators.Dedup.DocHashes = guarded("docHashesStreaming", payload) {
     if (payload == null) return null
     var p = 0
@@ -841,8 +795,8 @@ object Wire {
     if (payload(p) == 0) return null
     p += 1
     val docIdLen = readIntAt(payload, p)
-    // -1 = null doc_id (putStr null contract): same Doc(null, spans) shape
-    // as the object path, not a crash
+    // -1 = null doc_id (putStr null contract, and every spansPayload):
+    // a null DocHashes.doc_id, not a crash
     val docId =
       if (docIdLen < 0) null else new String(payload, p + 4, docIdLen, UTF_8)
     p += 4 + math.max(0, docIdLen)
@@ -869,14 +823,14 @@ object Wire {
       val mediaLen = readIntAt(payload, p); val mediaStart = p + 4
       p = mediaStart + math.max(mediaLen, 0)
       val offset = readIntAt(payload, p); p += 4
-      if (offset < prevOffset) // out-of-order: honor the sort contract
-        return graft.operators.Dedup.docHashes(docId, priority, court, decodeSpans(payload))
+      if (offset < prevOffset) // out of reading order: hash the sorted copy
+        return docHashesStreaming(priority, court, inOffsetOrder(payload))
       prevOffset = offset
 
       val kind = kindOf(payload, kindStart, math.max(kindLen, 0))
       val isRender = (kind eq KindText) || (kind eq KindHeading)
       // content identity over all fields, with presence/field delimiters
-      // (mirrors Dedup.docHashes char for char). Lanes are independent, so
+      // (the DocHashes definition, char for char). Lanes are independent, so
       // the render markers may be applied before the fused text pass as long
       // as each LANE sees its chars in the object-path order.
       fnvStr(st, 0, kind); fnvChar(st, 0, 0)
@@ -907,5 +861,73 @@ object Wire {
     import graft.operators.Dedup.fnvHex
     graft.operators.Dedup.DocHashes(docId, priority, court, sz, prefix,
       fnvHex(st(0), st(1)), fnvHex(st(2), st(3)), fnvHex(st(4), st(5)), fnvHex(st(6), st(7)))
+  }
+
+  /** `payload` itself when its span offsets never decrease; otherwise a copy
+    * whose span records are STABLY sorted by offset (the order
+    * `spans.sortBy(_.offset)` gives). The streaming kernels' reading-order
+    * step: a span record is a self-contained byte range, so sorting moves
+    * ranges and re-decodes nothing. */
+  private[graft] def inOffsetOrder(payload: Array[Byte]): Array[Byte] = guarded("inOffsetOrder", payload) {
+    val docAt = docBlockStart(payload)
+    if (docAt < 0) return payload
+    var p = skipStrAt(payload, docAt) // doc_id
+    val nSpans = readIntAt(payload, p); p += 4
+    if (nSpans < 0 || nSpans > payload.length / 16)
+      corrupt("inOffsetOrder", s"implausible span count $nSpans")
+    val starts = new Array[Int](nSpans + 1)
+    val offsets = new Array[Int](nSpans)
+    var sorted = true
+    var i = 0
+    while (i < nSpans) {
+      starts(i) = p
+      p = skipStrAt(payload, skipStrAt(payload, skipStrAt(payload, p)))
+      offsets(i) = readIntAt(payload, p); p += 4
+      if (i > 0 && offsets(i) < offsets(i - 1)) sorted = false
+      i += 1
+    }
+    starts(nSpans) = p
+    if (sorted) return payload
+    val out = java.util.Arrays.copyOf(payload, payload.length)
+    var q = starts(0)
+    (0 until nSpans).sortBy(offsets(_)).foreach { k => // sortBy is stable
+      val n = starts(k + 1) - starts(k)
+      System.arraycopy(payload, starts(k), out, q, n)
+      q += n
+    }
+    out
+  }
+
+  private val spansScratch: ThreadLocal[PayloadWriter] =
+    ThreadLocal.withInitial(() => new PayloadWriter(1 << 13))
+
+  /** A `spans` column value (array of (kind, text, media_ref, offset)
+    * structs) as a payload with no discoveries and a null doc_id: the query
+    * surface's way into the streaming kernels. String fields are copied
+    * byte for byte; null span elements are skipped and a null offset
+    * reads as 0. */
+  def spansPayload(spans: org.apache.spark.sql.catalyst.util.ArrayData): Array[Byte] = {
+    val w = spansScratch.get()
+    w.reset()
+    w.putByte(Version)
+    w.putInt(0) // no discoveries
+    w.putByte(1) // doc present
+    w.putNullStr() // doc_id
+    val countAt = w.reserveInt()
+    var count = 0
+    var i = 0
+    while (i < spans.numElements()) {
+      if (!spans.isNullAt(i)) {
+        val s = spans.getStruct(i, 4)
+        w.putUtf8(if (s.isNullAt(0)) null else s.getUTF8String(0))
+        w.putUtf8(if (s.isNullAt(1)) null else s.getUTF8String(1))
+        w.putUtf8(if (s.isNullAt(2)) null else s.getUTF8String(2))
+        w.putInt(if (s.isNullAt(3)) 0 else s.getInt(3))
+        count += 1
+      }
+      i += 1
+    }
+    w.patchInt(countAt, count)
+    w.result()
   }
 }

@@ -103,7 +103,7 @@ object CrawlOracle {
           math.ceil(hostCounts(h).toDouble / cfg.maxBucketRows).toInt)))
       // strict split: Σ bucket budgets == budgetPerHost exactly (buckets
       // below the remainder get one extra slot; with base 0, buckets past
-      // the remainder defer everything) — mirrors Politeness.schedule
+      // the remainder defer everything) — mirrors Politeness.scheduleFlagged
       def bucketBudget(h: String, salt: Int): Int = {
         val sf = saltFactor(h)
         val base = cfg.budgetPerHost / sf
@@ -199,13 +199,8 @@ object CrawlOracle {
         graft.operators.Segregate.RenderingNames.foreach(r =>
           renderSeen(r) += rendering(r, spans))
         docs += (id -> spans)
-        val paras = graft.operators.Segregate.segregateDoc(id, "plain", spans)
-        paragraphs += paras.count { p =>
-          val sents = p.content.split("[.!?]+(\\s+|$)").count(_.trim.nonEmpty)
-          val words = p.content.toLowerCase.split("[^\\p{L}]+")
-            .count(w => w.nonEmpty && !graft.operators.Segregate.Stopwords.contains(w))
-          sents >= 3 || words >= 30
-        }
+        paragraphs += PayloadOracle.segregateDoc(id, "plain", spans)
+          .count(p => PayloadOracle.sentKeepRegex(p.content))
       }
 
       // next frontier: deferred + retries + keep-first new discoveries

@@ -1,16 +1,16 @@
 package graft
 
-import graft.functions.Hashing
+import graft.functions.{Hashing, WireFunctions}
 import graft.model.{Doc, Span}
-import graft.operators.{Dedup, Segregate}
-import graft.sources.{Synth, SynthConfig}
+import graft.operators.Segregate
+import graft.sources.{Synth, SynthConfig, Wire}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the typed (plain-Scala) kernels to their Catalyst twins: same
-  * hashes, same rendering strings, same filter decisions. The crawler runs
-  * the typed path (array HOFs are interpreted CodegenFallback in Spark —
-  * measured ~10 ms/doc); the Column path is the query-surface API. */
+/** Pins the streaming payload kernels (doc hash, paragraph fold, filter) to
+  * the typed object-path oracle ([[PayloadOracle]]) and to their Catalyst
+  * twins: same hashes, same rendering strings, same filter decisions, for
+  * the crawl's fetch payloads and the queries' `spansPayload(spans)`. */
 class HashingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -34,13 +34,13 @@ class HashingSpec extends AnyFunSuite {
       .map { case (id, p, n, m) => id -> ((p, n, m)) }.toMap
     docs.foreach { d =>
       val (p, n, m) = (byId(d.doc_id)._1, byId(d.doc_id)._2, byId(d.doc_id)._3)
-      assert(p === Segregate.renderPlainStr(d.spans), s"plain ${d.doc_id}")
-      assert(n === Segregate.renderNoDigitsStr(d.spans), s"nodigits ${d.doc_id}")
-      assert(m === Segregate.renderMarkedStr(d.spans), s"marked ${d.doc_id}")
+      assert(p === PayloadOracle.renderPlainStr(d.spans), s"plain ${d.doc_id}")
+      assert(n === PayloadOracle.renderNoDigitsStr(d.spans), s"nodigits ${d.doc_id}")
+      assert(m === PayloadOracle.renderMarkedStr(d.spans), s"marked ${d.doc_id}")
     }
   }
 
-  test("typed sentKeepStr equals the Column sentCountFilter") {
+  test("sentKeepBytes equals the Column sentCountFilter") {
     val paras = Seq(
       "One. Two. Three.",
       "Short. Text.",
@@ -50,30 +50,38 @@ class HashingSpec extends AnyFunSuite {
       "1. 2. 3!? mixed punctuation here",
       ("content " * 40).trim)
     val df = paras.zipWithIndex.map { case (c, i) => (i, c) }.toDF("id", "content")
-    val keptCol = Segregate.sentCountFilter(df).select($"id").as[Int].collect().toSet
+    val keptCol = PayloadOracle.sentCountFilter(df).select($"id").as[Int].collect().toSet
     val keptScala = paras.zipWithIndex.collect {
-      case (c, i) if Segregate.sentKeepStr(c) => i
+      case (c, i) if { val b = c.getBytes("UTF-8"); Segregate.sentKeepBytes(b, 0, b.length) } => i
     }.toSet
     assert(keptCol === keptScala)
   }
 
-  /** Offset-unsorted docs for the streaming kernels' object-path fallback:
-    * a synth doc with its spans fully reversed, and one with its last two
-    * spans swapped. The swapped doc is chosen so its first n-2 spans already
-    * yield a surviving paragraph: the paragraph fold emits it before it
-    * meets the disorder, so its fallback must discard what it emitted. */
+  /** Offset-unsorted docs for the streaming kernels' sorted-copy rerun
+    * (Wire.inOffsetOrder): a synth doc with its spans fully reversed, one
+    * with its last two spans swapped, and one whose tied offsets must keep
+    * their payload order (a stable sort, as the oracle's `sortBy`). The
+    * swapped doc is chosen so its first n-2 spans already yield a surviving
+    * paragraph: the paragraph fold emits it before it meets the disorder,
+    * so its rerun must discard what it emitted. */
   private def unsortedDocs(cfg: SynthConfig): Seq[Doc] = {
     val reversed = Doc("u-rev", Synth.spansOf(cfg, 0L).reverse)
     val swapped = (0L until 200L).iterator.map(Synth.spansOf(cfg, _)).collectFirst {
-      case sp if sp.length >= 3 && Segregate.segregateDoc("u", "plain", sp.dropRight(2))
-          .exists(p => Segregate.sentKeepStr(p.content)) =>
+      case sp if sp.length >= 3 && PayloadOracle.segregateDoc("u", "plain", sp.dropRight(2))
+          .exists(p => PayloadOracle.sentKeepRegex(p.content)) =>
         Doc("u-swap", sp.dropRight(2) ++ Seq(sp.last, sp(sp.length - 2)))
     }
     assert(swapped.isDefined, "no synth doc emits a paragraph before its last two spans")
-    Seq(reversed, swapped.get)
+    val tied = Doc("u-tie", Seq(
+      Span("text", "3. third starter. One. Two. Three.", null, 2),
+      Span("text", "1. first of the tie. One. Two. Three.", null, 0),
+      Span("heading", "TIED HEADING", null, 1),
+      Span("text", "2. second of the tie. One. Two. Three.", null, 1),
+      Span("text", "4. closer", null, 3)))
+    Seq(reversed, swapped.get, tied)
   }
 
-  test("Wire.docHashesStreaming equals Dedup.docHashes(decodeSpans) bit-for-bit") {
+  test("Wire.docHashesStreaming equals the oracle docHashes(decodeSpans) bit-for-bit") {
     val cfg = SynthConfig()
     val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i))) ++ unsortedDocs(cfg)
     // adversarial shapes: unicode (2/3-byte UTF-8), supplementary-plane code
@@ -88,15 +96,14 @@ class HashingSpec extends AnyFunSuite {
       Doc("w4", Seq.empty),
       Doc("w5", Seq(Span("heading", null, null, 0), Span("text", " 2 . dotted", null, 1))))
     (synthDocs ++ weird).foreach { d =>
-      val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val streamed = graft.sources.Wire.docHashesStreaming(7L, "c", payload)
-      val objects = Dedup.docHashes(d.doc_id, 7L, "c",
-        graft.sources.Wire.decodeSpans(payload))
+      val payload = Wire.encode(Nil, Some(d))
+      val streamed = Wire.docHashesStreaming(7L, "c", payload)
+      val objects = PayloadOracle.docHashes(d.doc_id, 7L, "c", PayloadOracle.decodeSpans(payload))
       assert(streamed === objects, s"streaming hash mismatch for ${d.doc_id}")
     }
   }
 
-  test("Wire.paragraphsArrayData equals segregateDoc+sentKeepStr on objects") {
+  test("Wire.paragraphsArrayData equals the oracle fold and regex filter on objects") {
     // Compares CONTENT, not just counts. Regression (round 4): the Catalyst
     // sink wrapped the reusable fold scratch zero-copy (UTF8String.fromBytes
     // aliases the array), so every row read back as the LAST paragraph's
@@ -123,16 +130,16 @@ class HashingSpec extends AnyFunSuite {
       Doc("w8", Seq(Span("text", "5 . nbsp ref. One. Two. Three.", null, 0))),
       Doc("w9", Seq(Span("text", "𐄇. aegean ref. One. Two. Three.", null, 0))))
     (synthDocs ++ weird).foreach { d =>
-      val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val arr = graft.sources.Wire.paragraphsArrayData(payload, "plain", 3, 30)
+      val payload = Wire.encode(Nil, Some(d))
+      val arr = Wire.paragraphsArrayData(payload, 3, 30)
       assert(arr != null, s"null array for ${d.doc_id}")
       val streamed = (0 until arr.numElements()).map { k =>
         val r = arr.getStruct(k, 4)
         (r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
           if (r.isNullAt(3)) null else r.getUTF8String(3).toString)
       }
-      val objects = Segregate.segregateDoc(d.doc_id, "plain", d.spans)
-        .filter(p => Segregate.sentKeepStr(p.content))
+      val objects = PayloadOracle.segregateDoc(d.doc_id, "plain", d.spans)
+        .filter(p => PayloadOracle.sentKeepRegex(p.content))
         .map(p => (p.page, p.paragraph_number, p.content, p.reference))
       assert(streamed === objects, s"streaming paragraph mismatch for ${d.doc_id}")
     }
@@ -143,15 +150,15 @@ class HashingSpec extends AnyFunSuite {
       Synth.Discovered("https://a.example.org/x?y=1", "c", "q", 2, 1, 99L, "CN/1", "Tü", "2022-01-01", 3),
       Synth.Discovered("https://b.example.org/", null, null, -1, 2, -1L, null, null, null, -1))
     val doc = Doc("D/1", Seq(Span("text", "body ünïcode 𐄇", null, 0), Span("image", null, "ref", 1)))
-    val p1 = graft.sources.Wire.encode(ds, Some(doc))
-    assert(graft.sources.Wire.decodeDiscovered(p1) === ds)
-    assert(graft.sources.Wire.decodeDoc(p1) === Some(doc))
-    val p2 = graft.sources.Wire.encode(ds, None)
-    assert(graft.sources.Wire.decodeDiscovered(p2) === ds)
-    assert(graft.sources.Wire.decodeDoc(p2) === None)
-    assert(graft.sources.Wire.encode(Nil, None) === null)
-    assert(graft.sources.Wire.decodeDiscovered(null) === Nil)
-    assert(graft.sources.Wire.decodeDoc(null) === None)
+    val p1 = Wire.encode(ds, Some(doc))
+    assert(Wire.decodeDiscovered(p1) === ds)
+    assert(PayloadOracle.decodeDoc(p1) === Some(doc))
+    val p2 = Wire.encode(ds, None)
+    assert(Wire.decodeDiscovered(p2) === ds)
+    assert(PayloadOracle.decodeDoc(p2) === None)
+    assert(Wire.encode(Nil, None) === null)
+    assert(Wire.decodeDiscovered(null) === Nil)
+    assert(PayloadOracle.decodeDoc(null) === None)
   }
 
   test("fetchEncoded equals fetch+encode on every URL kind, bit-for-bit") {
@@ -179,7 +186,7 @@ class HashingSpec extends AnyFunSuite {
         assert(enc.docId === out.doc.map(_.doc_id).orNull, url)
         assert(enc.bytes === out.bytes, url)
         assert(enc.latencyMicros === out.latencyMicros, url)
-        val expected = graft.sources.Wire.encode(out.discovered, out.doc)
+        val expected = Wire.encode(out.discovered, out.doc)
         assert(java.util.Arrays.equals(enc.payload, expected), s"payload bytes differ for $url attempt $attempt")
       }
     }
@@ -211,15 +218,17 @@ class HashingSpec extends AnyFunSuite {
       "١٢. arabic", "Ⅻ. roman numeral", "①. circled", "12",
       "12.", "  .", "1 2.", "𐄇. aegean number", " 1. ")
     cases.foreach { s =>
-      assert(Segregate.starterFind(s) === pat.matcher(s).find(), s"mismatch on '$s'")
+      assert(PayloadOracle.starterFind(s) === pat.matcher(s).find(), s"mismatch on '$s'")
     }
   }
 
   test("docHashes is deterministic and discriminates content") {
     val cfg = SynthConfig()
-    val a = Dedup.docHashes("x", 1L, "c", Synth.spansOf(cfg, 1L))
-    val a2 = Dedup.docHashes("x", 1L, "c", Synth.spansOf(cfg, 1L))
-    val b = Dedup.docHashes("x", 1L, "c", Synth.spansOf(cfg, 2L))
+    def docHashes(id: String, spans: Seq[Span]) =
+      Wire.docHashesStreaming(1L, "c", Wire.encode(Nil, Some(Doc(id, spans))))
+    val a = docHashes("x", Synth.spansOf(cfg, 1L))
+    val a2 = docHashes("x", Synth.spansOf(cfg, 1L))
+    val b = docHashes("x", Synth.spansOf(cfg, 2L))
     assert(a === a2)
     assert(a.content_hash !== b.content_hash)
     // D3 plant: two contents sharing a baseId collide under nodigits only
@@ -228,10 +237,46 @@ class HashingSpec extends AnyFunSuite {
     val partner = (0L until cfg.contentSpace).find(c2 =>
       c2 != 10L && Synth.baseIdOf(cfg, c2) == base)
     partner.foreach { c2 =>
-      val hA = Dedup.docHashes("a", 1L, "c", contentA)
-      val hB = Dedup.docHashes("b", 1L, "c", Synth.spansOf(cfg, c2))
+      val hA = docHashes("a", contentA)
+      val hB = docHashes("b", Synth.spansOf(cfg, c2))
       assert(hA.render_hash_nodigits === hB.render_hash_nodigits)
       assert(hA.content_hash !== hB.content_hash)
     }
+  }
+
+  test("query-path D2/D3 columns equal docHashesStruct of the doc's Synth fetch payload") {
+    // one identity: q_rendering_dedup hashes docHashesStruct(spansPayload(spans)),
+    // the crawl hashes docHashesStruct(payload) at fetch and stores it in docs
+    val cfg = SynthConfig()
+    val fetched = (0L until 60L).map { fid =>
+      val enc = Synth.fetchEncoded(cfg, Synth.pdfUrl(cfg, (fid % cfg.courts).toInt,
+        fid * 64 + (fid % cfg.courts)), 0)
+      (enc.docId, enc.payload)
+    }.filter(_._2 != null)
+    assert(fetched.size > 40)
+    val withSpans = fetched.map { case (id, payload) => (id, payload, PayloadOracle.decodeSpans(payload)) }
+      .toDF("doc_id", "payload", "spans")
+    val rows = withSpans.select($"doc_id",
+        WireFunctions.docHashesStruct($"payload").as("fetch"),
+        WireFunctions.docHashesStruct(WireFunctions.spansPayload($"spans")).as("query"))
+      .collect()
+    assert(rows.length === fetched.size)
+    rows.foreach { r =>
+      assert(!r.isNullAt(1), r.getString(0))
+      assert(r.getStruct(2) === r.getStruct(1), s"identity differs for ${r.getString(0)}")
+    }
+  }
+
+  test("inOffsetOrder: the payload itself when sorted, a stable offset sort otherwise") {
+    val sorted = Wire.encode(Nil, Some(Doc("s", Seq(Span("text", "a", null, 0),
+      Span("text", "b", null, 0), Span("image", null, "m", 1)))))
+    assert(Wire.inOffsetOrder(sorted) eq sorted)
+    val docless = Wire.encode(Seq(Synth.Discovered("u", "c", "q", 1, 0, 1L, null, null, null, 0)), None)
+    assert(Wire.inOffsetOrder(docless) eq docless)
+    val spans = Seq(Span("text", "c", null, 2), Span("text", "a1", null, 0),
+      Span(null, null, null, 1), Span("text", "a2", null, 0))
+    val unsorted = Wire.encode(Nil, Some(Doc(null, spans)))
+    assert(java.util.Arrays.equals(Wire.inOffsetOrder(unsorted),
+      Wire.encode(Nil, Some(Doc(null, spans.sortBy(_.offset))))))
   }
 }

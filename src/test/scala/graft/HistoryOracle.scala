@@ -42,16 +42,13 @@ object HistoryOracle {
       renderings: Seq[String],
       history: Option[DataFrame],
       arrival: Seq[Column]): DataFrame = {
-    val hashed =
-      if (renderings.forall(r => docs.columns.contains(Dedup.renderHashCol(r)))) docs
-      else Dedup.withRenderHashes(docs, renderings)
-    renderings.foldLeft(hashed) { (kept, r) =>
+    renderings.foldLeft(docs) { (kept, r) =>
       val hc = Dedup.renderHashCol(r)
       val w = Window.partitionBy(col(hc)).orderBy(arrival: _*)
       val firsts = kept.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
       history match {
-        case Some(h) => antiHistory(firsts, hashed, h, Seq(hc))
+        case Some(h) => antiHistory(firsts, docs, h, Seq(hc))
         case None    => firsts
       }
     }

@@ -94,6 +94,20 @@ class HistoryProbeSpec extends AnyFunSuite {
     }
   }
 
+  test("renderingDedup on a frame without its render_hash columns names them") {
+    // a frame carrying only spans has no docs identity: recomputing another
+    // one could never match the docs history, so it is an error
+    val cfg = graft.sources.SynthConfig()
+    val spansOnly = (0L until 5L).map(i => (s"S/$i", i, graft.sources.Synth.spansOf(cfg, i)))
+      .toDF("doc_id", "priority", "spans")
+      .withColumn("render_hash_plain", lit("p"))
+    val e = intercept[IllegalArgumentException](
+      Dedup.renderingDedup(spansOnly, Segregate.RenderingNames, None, arrival))
+    assert(e.getMessage.contains("render_hash_nodigits"), e.getMessage)
+    assert(e.getMessage.contains("render_hash_marked"), e.getMessage)
+    assert(!e.getMessage.contains("render_hash_plain"), e.getMessage)
+  }
+
   // (case_number, canonical_url, priority)
   private def judgments(rows: (String, String, Long)*): DataFrame =
     rows.toDF("case_number", "canonical_url", "priority")

@@ -1,7 +1,9 @@
 package graft
 
 import graft.model.{CrawlConfig, FrontierEntry}
-import graft.operators.Politeness
+import graft.operators.{Politeness, Sched}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** L3/C4: bounded politeness selection on a frontier FAR larger than the
@@ -11,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PolitenessSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  /** Schedule a frontier with no D1/robots rejects. */
+  private def schedule(novel: Dataset[FrontierEntry], cfg: CrawlConfig): Dataset[Sched] =
+    Politeness.scheduleFlagged(novel.toDF().withColumn("__drop", lit(null).cast("string")), cfg)
 
   test("frontier >> budget: exactly top-budget per bucket scheduled, rest deferred, order exact") {
     val n = 100000
@@ -22,7 +28,7 @@ class PolitenessSpec extends AnyFunSuite {
         i * 2654435761L, "big.example.org", "DHC", "q", 1, 0,
         priority = i, status = "pending", retry_count = 0, discovered_round = 0)
     }
-    val sched = Politeness.schedule(frontier, cfg).collect()
+    val sched = schedule(frontier, cfg).collect()
     val scheduled = sched.filter(_.scheduled)
     val deferred = sched.filter(!_.scheduled)
     // salt_factor = min(saltMax=2, ceil(n/8)) = 2 buckets × budget 4 each
@@ -55,7 +61,7 @@ class PolitenessSpec extends AnyFunSuite {
     // budget 5 over salt_factor 4 → buckets (salt 0) 2, (1..3) 1 each = 5
     val cfg = CrawlConfig(budgetPerHost = 5, numPartitions = 4, saltMax = 4,
       maxBucketRows = 250) // 1000 rows / 250 → salt_factor 4
-    val sched = Politeness.schedule(bigHostFrontier(1000), cfg).collect()
+    val sched = schedule(bigHostFrontier(1000), cfg).collect()
     val scheduled = sched.filter(_.scheduled)
     assert(scheduled.length === 5, "Σ bucket budgets must equal budgetPerHost")
     val perSalt = scheduled.groupBy(_.salt).view.mapValues(_.length).toMap
@@ -68,7 +74,7 @@ class PolitenessSpec extends AnyFunSuite {
     // slot each, salts 2,3 get 0 and defer everything
     val cfg = CrawlConfig(budgetPerHost = 2, numPartitions = 4, saltMax = 4,
       maxBucketRows = 250)
-    val sched = Politeness.schedule(bigHostFrontier(1000), cfg).collect()
+    val sched = schedule(bigHostFrontier(1000), cfg).collect()
     val scheduled = sched.filter(_.scheduled)
     assert(scheduled.length === 2, "over-salting must not over-admit past the hard cap")
     assert(scheduled.map(_.salt).toSet.subsetOf(Set(0, 1)))
@@ -79,7 +85,7 @@ class PolitenessSpec extends AnyFunSuite {
     import graft.sources.SynthConfig
     val cfg = CrawlConfig(budgetPerHost = 64, numPartitions = 4, saltMax = 2,
       maxBucketRows = Int.MaxValue)
-    val sched = Politeness.schedule(bigHostFrontier(200), cfg)
+    val sched = schedule(bigHostFrontier(200), cfg)
     val interval = 50000L // 50 ms ⇒ ≤ 20 req/s/host (25 req/min analog scaled)
     val limited = Politeness.fetchAll(sched, SynthConfig(), interval)
       .as[graft.operators.FetchEvent].collect()
@@ -113,7 +119,7 @@ class PolitenessSpec extends AnyFunSuite {
     }
     val cfg = CrawlConfig(budgetPerHost = Int.MaxValue / 2, numPartitions = 4,
       saltMax = 2, maxBucketRows = Int.MaxValue)
-    val sched = Politeness.schedule(frontier, cfg).collect()
+    val sched = schedule(frontier, cfg).collect()
     val scheduled = sched.filter(_.scheduled)
     assert(scheduled.length === n, "each canonical scheduled exactly once")
     assert(scheduled.forall(_.entry.priority < 1000L), "the (priority,url)-minimal copy wins")
@@ -128,7 +134,7 @@ class PolitenessSpec extends AnyFunSuite {
     import graft.sources.{Synth, SynthConfig}
     val cfg = CrawlConfig(budgetPerHost = 256, numPartitions = 4, saltMax = 2,
       maxBucketRows = Int.MaxValue)
-    val sched = Politeness.schedule(bigHostFrontier(200), cfg)
+    val sched = schedule(bigHostFrontier(200), cfg)
     Synth.fetchRowCounting = true
     Synth.fetchRowCount.set(0L)
     try {

@@ -1,7 +1,8 @@
 package graft
 
-import graft.model.{Doc, Span}
+import graft.model.{Doc, Paragraph, Span}
 import graft.operators.Segregate
+import graft.sources.Wire
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,8 +22,18 @@ class SegregateSpec extends AnyFunSuite {
     Span("table", null, null, 5),
     Span("text", "3. This trailing paragraph must be dropped", null, 6))
 
+  /** The production W1 fold (the streaming kernel, unfiltered) on spans. */
+  private def fold(docId: String, spans: Seq[Span]): Seq[Paragraph] = {
+    val arr = Wire.paragraphsArrayData(Wire.encode(Nil, Some(Doc(docId, spans))), 0, 0)
+    (0 until arr.numElements()).map { k =>
+      val r = arr.getStruct(k, 4)
+      Paragraph(docId, "plain", r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
+        if (r.isNullAt(3)) null else r.getUTF8String(3).toString)
+    }
+  }
+
   test("W1 golden: paragraph fold drops the trailing paragraph") {
-    val paras = Segregate.segregateDoc("J1", "plain", j1)
+    val paras = fold("J1", j1)
     assert(paras.map(_.paragraph_number) === Seq(1, 2))
     assert(paras.head.content === "The plaintiff filed the present suit seeking permanent injunction contd")
     assert(paras.head.reference === "1.")
@@ -38,7 +49,7 @@ class SegregateSpec extends AnyFunSuite {
       Span("heading", "SECTION", null, 1), // kills the open paragraph
       Span("text", "2. second para", null, 2),
       Span("text", "3. third para", null, 3)) // emits para 2; 3 is dropped (trailing)
-    val paras = Segregate.segregateDoc("d", "plain", spans)
+    val paras = fold("d", spans)
     assert(paras.map(_.content) === Seq("second para"))
     assert(paras.map(_.paragraph_number) === Seq(1))
   }
@@ -48,7 +59,7 @@ class SegregateSpec extends AnyFunSuite {
       Span("text", "preamble not numbered", null, 0),
       Span("text", "1. body", null, 1),
       Span("text", "2. next", null, 2))
-    val paras = Segregate.segregateDoc("d", "plain", spans)
+    val paras = fold("d", spans)
     assert(paras.map(_.content) === Seq("body"))
   }
 
@@ -60,7 +71,7 @@ class SegregateSpec extends AnyFunSuite {
       Span("text", "1.2. nested numbering content here", null, 0),
       Span("text", "2 . spaced dot paragraph", null, 1),
       Span("text", "3. closer", null, 2))
-    val paras = Segregate.segregateDoc("d", "plain", spans)
+    val paras = fold("d", spans)
     assert(paras.head.reference === "1.2.")
     assert(paras.head.content === "nested numbering content here")
     assert(paras(1).reference === "2.")
@@ -69,8 +80,7 @@ class SegregateSpec extends AnyFunSuite {
 
   test("W1: out-of-order offsets are folded in reading order") {
     val shuffled = scala.util.Random.shuffle(j1)
-    assert(Segregate.segregateDoc("J1", "plain", shuffled) ===
-      Segregate.segregateDoc("J1", "plain", j1))
+    assert(fold("J1", shuffled) === fold("J1", j1))
   }
 
   test("renderings: plain skips tables/images, keeps reading order") {
@@ -105,94 +115,54 @@ class SegregateSpec extends AnyFunSuite {
       ("p3", ("word " * 31).trim + "."),                // 31 content words → kept
       ("p4", "the a of and to in on for with by")       // all stopwords → dropped
     ).toDF("doc_id", "content")
-    val kept = Segregate.sentCountFilter(paras).select("doc_id").as[String].collect().toSet
+    val kept = PayloadOracle.sentCountFilter(paras).select("doc_id").as[String].collect().toSet
     assert(kept === Set("p1", "p3"))
   }
 
-  test("sentenceCountScan equals the regex split count (property over punct/ws shapes)") {
-    val pat = java.util.regex.Pattern.compile("[.!?]+(\\s+|$)")
-    def regexCount(s: String): Int = pat.split(s).count(_.trim.nonEmpty)
+  test("sentKeepBytes equals the reference regex filter (property incl. non-ASCII)") {
+    // The one production filter against the reference's regexes
+    // (PayloadOracle.sentKeepRegex): sentence split on [.!?]+(\s+|$), then
+    // lowercased \p{L} tokens not in the stopword list. minWords 1000 leaves
+    // the sentence leg alone to decide, so minSents 1-4 pins its exact count.
+    val stops = Segregate.Stopwords
     val fixed = Seq(
       "", " ", ".", "...", "a.", "a.b", "a. b", "a.. .b", "a!!x", "a!. \tb",
       "one. two! three? four", ". leading", " . ", "a . b", "tab.\tnext",
-      "punct!?. mixed", "end with ws ", "..a..b..", "a.\n\nb.", "¿unicode? sí. ok")
-    // deterministic pseudo-random strings over a punct/ws-heavy alphabet
-    val alphabet = "ab .!?\t\n."
-    var h = 12345L
-    val rand = (1 to 300).map { _ =>
-      val len = { h = h * 6364136223846793005L + 1442695040888963407L; (Math.floorMod(h, 30L)).toInt }
-      (0 until len).map { _ =>
-        h = h * 6364136223846793005L + 1442695040888963407L
-        alphabet(Math.floorMod(h, alphabet.length.toLong).toInt)
-      }.mkString
-    }
-    (fixed ++ rand).foreach { s =>
-      assert(Segregate.sentenceCountScan(s) === regexCount(s), s"mismatch on '${s.replace("\n", "\\n").replace("\t", "\\t")}'")
-    }
-  }
-
-  test("sentKeepBytes equals sentKeepStr on the UTF-8 slice (property incl. non-ASCII)") {
-    val fixed = Seq(
-      "", " ", "the the the", "One. Two. Three.", "word " * 35,
-      "the of to in on for with by " * 5, "a! b? c.", "x.. y",
-      "ünïcode wörds " * 12, "mixed ascii ünd the of " * 8,
+      "punct!?. mixed", "end with ws ", "..a..b..", "a.\n\nb.", "¿unicode? sí. ok",
+      "the the the", "alpha beta gamma", "word " * 40, "One. Two. Three.", "x.. y",
+      "the quick brown fox jumps over the lazy dog " * 4,
+      "through further during once own same",
+      "extraordinarily long tokens everywhere " * 10,
+      "ünïcode wörds ärger " * 12, "mixed ascii ünd unicode the of to " * 8,
       "𐄇 supplementary. Two. Three.", "word𐄇glued " * 35,
       "é", "café. thé. ok.", "  padded  ", "\t\ntabs.\nnew. lines.",
-      Segregate.Stopwords.mkString(" "),
-      (Segregate.Stopwords.take(15) ++ Seq("realword")).mkString(" ") * 3)
-    // BMP-only alphabet: indexing by char would split a supplementary pair
-    // into unpaired surrogates, and the JDK encoder turns those into '?' —
-    // the byte and String paths would then see different content
-    val alphabet = "abc theof .!?üé\t"
+      // İ lowercases to i + U+0307 (a mark, so a token split); ß stays ß
+      "İstanbul İNDİA the İ " * 8, "straße ßtraße Maß THE " * 8, "İ. ß. ok.",
+      stops.mkString(" "), (stops.take(20) ++ Seq("contentword")).mkString(" ") * 3)
+    // deterministic pseudo-random strings: punct/ws-heavy chars, and
+    // stopword/content/non-ASCII tokens. BMP-only: indexing by char would
+    // split a supplementary pair into unpaired surrogates, which the JDK
+    // encoder turns into '?' — the byte slice would then hold other text
     var h = 5555L
-    val rand = (1 to 400).map { _ =>
-      val len = { h = h * 6364136223846793005L + 1442695040888963407L; Math.floorMod(h, 60L).toInt }
-      (0 until len).map { _ =>
-        h = h * 6364136223846793005L + 1442695040888963407L
-        alphabet(Math.floorMod(h, alphabet.length.toLong).toInt)
-      }.mkString
+    def next(bound: Int): Int = {
+      h = h * 6364136223846793005L + 1442695040888963407L
+      Math.floorMod(h, bound.toLong).toInt
     }
-    for (s <- fixed ++ rand; minSents <- Seq(1, 3); minWords <- Seq(3, 30)) {
+    val alphabet = "abc theof .!?üéİß\t\n."
+    val chars = (1 to 400).map(_ => (0 until next(60)).map(_ => alphabet(next(alphabet.length))).mkString)
+    val vocab = stops ++ Seq("alpha", "beta", "verylongcontentword", "x", ".", "!", "  ", "\t",
+      "İkinci", "Straße", "ß")
+    val tokens = (1 to 300).map(_ => (0 until next(60)).map(_ => vocab(next(vocab.length))).mkString(" "))
+    for (s <- fixed ++ chars ++ tokens; minSents <- Seq(1, 2, 3, 4); minWords <- Seq(3, 30, 1000)) {
+      val want = PayloadOracle.sentKeepRegex(s, minSents, minWords)
       val b = s.getBytes("UTF-8")
       // embed in padding to prove slice offsets are honored
       val padded = ("XX" + s + "YY").getBytes("UTF-8")
-      assert(Segregate.sentKeepBytes(b, 0, b.length, minSents, minWords)
-        === Segregate.sentKeepStr(s, minSents, minWords), s"'$s' ($minSents,$minWords)")
-      assert(Segregate.sentKeepBytes(padded, 2, padded.length - 2, minSents, minWords)
-        === Segregate.sentKeepStr(s, minSents, minWords), s"padded '$s'")
-    }
-  }
-
-  test("sentKeepStr scans equal the reference regex implementation (property)") {
-    val sentPat = java.util.regex.Pattern.compile("[.!?]+(\\s+|$)")
-    val wordPat = java.util.regex.Pattern.compile("[^\\p{L}]+")
-    val stop = Segregate.Stopwords.toSet
-    def ref(content: String, minSents: Int, minWords: Int): Boolean = {
-      val sents = sentPat.split(content).count(_.trim.nonEmpty)
-      if (sents >= minSents) return true
-      wordPat.split(content.toLowerCase).count(w => w.nonEmpty && !stop.contains(w)) >= minWords
-    }
-    val stops = Segregate.Stopwords
-    // word/punct mixes, stopword-heavy, long-token, unicode fallback
-    val fixed = Seq(
-      "", "the the the the", "alpha beta gamma", "word " * 40,
-      "the quick brown fox jumps over the lazy dog " * 4,
-      "One. Two. Three.", "x! y? z.", "through further during once own same",
-      "extraordinarily long tokens everywhere " * 10,
-      "ünïcode wörds ärger " * 12, "mixed ascii ünd unicode the of to " * 8,
-      stops.mkString(" "), (stops.take(20) ++ Seq("contentword")).mkString(" "))
-    var h = 987654321L
-    val vocab = stops ++ Seq("alpha", "beta", "verylongcontentword", "x", ".", "!", "  ", "\t")
-    val rand = (1 to 300).map { _ =>
-      val len = { h = h * 6364136223846793005L + 1442695040888963407L; Math.floorMod(h, 60L).toInt }
-      (0 until len).map { _ =>
-        h = h * 6364136223846793005L + 1442695040888963407L
-        vocab(Math.floorMod(h, vocab.length.toLong).toInt)
-      }.mkString(" ")
-    }
-    for (s <- fixed ++ rand; minSents <- Seq(1, 3); minWords <- Seq(5, 30)) {
-      assert(Segregate.sentKeepStr(s, minSents, minWords) === ref(s, minSents, minWords),
-        s"mismatch (minSents=$minSents minWords=$minWords) on '${s.take(80)}'")
+      val shown = s.take(80).replace("\n", "\\n").replace("\t", "\\t")
+      assert(Segregate.sentKeepBytes(b, 0, b.length, minSents, minWords) === want,
+        s"'$shown' ($minSents,$minWords)")
+      assert(Segregate.sentKeepBytes(padded, 2, padded.length - 2, minSents, minWords) === want,
+        s"padded '$shown' ($minSents,$minWords)")
     }
   }
 
@@ -230,7 +200,7 @@ class SegregateSpec extends AnyFunSuite {
     val adv = advDocs.toDS.toDF
     val rel = Segregate.paragraphsRelational(adv).collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5))).toSet
-    val typed = advDocs.flatMap(d => Segregate.segregateDoc(d.doc_id, "plain", d.spans))
+    val typed = advDocs.flatMap(d => PayloadOracle.segregateDoc(d.doc_id, "plain", d.spans))
       .map(p => (p.doc_id, p.extractor, p.page, p.paragraph_number, p.content, p.reference)).toSet
     assert(rel === typed)
 
@@ -240,7 +210,7 @@ class SegregateSpec extends AnyFunSuite {
     val docs = (0L until 20L).map(c => Doc(s"d$c", Synth.spansOf(cfg, c)))
     val rel2 = Segregate.paragraphsRelational(docs.toDS.toDF).collect()
       .map(r => (r.getString(0), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5))).toSet
-    val typed2 = docs.flatMap(d => Segregate.segregateDoc(d.doc_id, "plain", d.spans))
+    val typed2 = docs.flatMap(d => PayloadOracle.segregateDoc(d.doc_id, "plain", d.spans))
       .map(p => (p.doc_id, p.page, p.paragraph_number, p.content, p.reference)).toSet
     assert(rel2 === typed2)
   }
@@ -249,7 +219,7 @@ class SegregateSpec extends AnyFunSuite {
     import graft.sources.{Synth, SynthConfig}
     val cfg = SynthConfig()
     val docs = (0L until 20L).map(c => Doc(s"d$c", Synth.spansOf(cfg, c)))
-    val typed = Segregate.paragraphs(docs.toDS).collect()
+    val typed = PayloadOracle.paragraphs(docs.toDS).collect()
       .map(p => (p.doc_id, p.paragraph_number, p.content, p.reference, p.page)).toSet
 
     // relational cross-check (SURVEY.md W1(b)): explode, running sum of

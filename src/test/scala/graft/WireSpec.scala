@@ -31,10 +31,11 @@ class WireSpec extends AnyFunSuite {
 
   private val decoders: Seq[(String, Array[Byte] => Any)] = Seq(
     "decodeDiscovered" -> (b => Wire.decodeDiscovered(b)),
-    "decodeDoc" -> (b => Wire.decodeDoc(b)),
+    "decodeDoc" -> (b => PayloadOracle.decodeDoc(b)),
+    "inOffsetOrder" -> (b => Wire.inOffsetOrder(b)),
     "spansArrayData" -> (b => Wire.spansArrayData(b)),
     "docHashesStreaming" -> (b => Wire.docHashesStreaming(0L, "c", b)),
-    "paragraphsArrayData" -> (b => Wire.paragraphsArrayData(b, "plain", 1, 3)))
+    "paragraphsArrayData" -> (b => Wire.paragraphsArrayData(b, 1, 3)))
 
   private def assertSaneFailure(name: String, bytes: Array[Byte]): Unit = {
     val free0 = Runtime.getRuntime.freeMemory()
@@ -55,7 +56,7 @@ class WireSpec extends AnyFunSuite {
     assert(disc.length === 3)
     assert(disc.head.url === "https://h.example.org/d/0")
     assert(disc(1).caseNumber === null)
-    val doc = Wire.decodeDoc(b).get
+    val doc = PayloadOracle.decodeDoc(b).get
     assert(doc.doc_id === "DHC/9")
     assert(doc.spans.map(_.kind) === Seq("heading", "text", "image", "text"))
     assert(doc.spans(2).media_ref === "media/9/img0.png")
