@@ -374,19 +374,17 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
     }),
 
-    // ---- text-dedup sketches. The sketch queries run the kernels in
-    // PORTABLE (oracle-mode) hash arithmetic — Lehmer/MINSTD folds in the
-    // 2^31-1 field, every step i64-exact — so DuckDB reproduces the raw
-    // sketch values bit-for-bit (engine default elsewhere stays xxhash64;
-    // structure — tokenization, shingling, bands, bit fold — is identical
-    // between modes and q_sketch_invariance pins the default mode). ----
+    // ---- text-dedup sketches. The sketch kernels' hash arithmetic is
+    // Lehmer/MINSTD folds in the 2^31-1 field, every step i64-exact, so
+    // DuckDB reproduces the raw sketch values of q_simhash,
+    // q_minhash_candidates and q_fingerprint bit-for-bit. ----
     "q_minhash_candidates" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       // (a doc_id tSpread of the sig input was A/B'd and reverted: the sig
       // pass over sf-scale documents is ~0.3 s single-task, and the extra
       // exchange + stage latency measured a net wash-to-loss)
       val pairs = Similarity.minhashNearDupPairs(d, "doc_id", "text",
-        shingleK = 3, numHashes = 32, bands = 16, threshold = 0.25, portable = true)
+        shingleK = 3, numHashes = 32, bands = 16, threshold = 0.25)
       // per-doc candidate count (left join keeps all docs → rows>0 always)
       d.select(col("doc_id"))
         .join(pairs.groupBy(col("id_a").as("doc_id"))
@@ -396,7 +394,7 @@ object SparkEntry {
 
     "q_simhash" -> ((s, dir) => {
       t(s, dir, "documents")
-        .select(col("doc_id"), TF.simhash64(col("text"), portable = true).as("simhash"))
+        .select(col("doc_id"), TF.simhash64(col("text")).as("simhash"))
         .withColumn("bucket", shiftrightunsigned(col("simhash"), 52))
     }),
 
@@ -414,7 +412,7 @@ object SparkEntry {
     "q_fingerprint" -> ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          TF.fingerprint(col("text"), 5, 8, portable = true).as("fp"))
+          TF.fingerprint(col("text"), 5, 8).as("fp"))
         .select(col("doc_id"), size(col("fp")).as("fp_size"),
           element_at(col("fp"), 1).as("fp_min"))
     }),
@@ -443,9 +441,9 @@ object SparkEntry {
     }),
 
     "q_sketch_invariance" -> ((s, dir) => {
-      // PROPERTY oracle for the three engine-hash sketches (their raw values
-      // are xxhash-specific, so q_simhash/q_minhash_candidates/q_fingerprint
-      // stay rows-only — but their INVARIANTS are exactly checkable): plant
+      // PROPERTY oracle for the three sketches (their raw values are pinned
+      // by q_simhash/q_minhash_candidates/q_fingerprint; this pins the
+      // invariants the dedup chain relies on, from text alone): plant
       // deterministic duplicates (docs 0..49 re-added under doc_id+10000,
       // same text) and verify, per planted pair, that (a) MinHash+LSH
       // candidate generation covers the pair — identical text ⇒ identical
@@ -591,18 +589,17 @@ object SparkEntry {
   )
 
   /** DuckDB-equivalent SQL per query (same column names; same
-    * exact-decimal-then-double arithmetic). Spark-only entries (hash
-    * sketches, span operators) are intentionally absent → rows-only check. */
+    * exact-decimal-then-double arithmetic); every query has one. */
   // ---------------------------------------------------------------------
-  // Portable-sketch oracles: DuckDB replicas of the oracle-mode (Lehmer
-  // i64-arithmetic) sketch kernels — every intermediate fits BIGINT, so the
-  // raw sketch values are bit-exact across engines (same scheme that made
-  // q_ann_srp exactly oracle-checkable). The CTE prefix reproduces
-  // SketchKernels.tokenHashesPortable: ASCII-\s tokens of lower(text), then
-  // h = (h*48271 + codepoint) mod (2^31-1) per token.
+  // Sketch oracles: DuckDB replicas of the Lehmer (i64-arithmetic) sketch
+  // kernels — every intermediate fits BIGINT, so the raw sketch values are
+  // bit-exact across engines (same scheme that made q_ann_srp exactly
+  // oracle-checkable). The CTE prefix reproduces SketchKernels.tokenHashes:
+  // ASCII-\s tokens of lower(text), then h = (h*48271 + codepoint)
+  // mod (2^31-1) per token.
   // ---------------------------------------------------------------------
 
-  private val portableTokCte: String =
+  private val tokenHashCte: String =
     """WITH tok AS (
       |  SELECT doc_id,
       |    list_filter(string_split_regex(lower(text), '[\t\n\x0B\f\r ]+'), t -> t != '') AS toks
@@ -631,7 +628,7 @@ object SparkEntry {
     // added as -2^63 so every intermediate stays in BIGINT range
     val acc = "CASE WHEN b0 = 1 THEN -9223372036854775807 - 1 ELSE 0 END" +
       (1 until 64).map(i => s" + b$i * ${1L << (63 - i)}").mkString
-    s"""$portableTokCte,
+    s"""$tokenHashCte,
        |th1 AS (SELECT doc_id, list_transform(th, h -> (h*48271 + 1) % 2147483647) AS h1 FROM th),
        |h64 AS (SELECT doc_id, list_transform(h1, g -> g*2147483648 + (g*48271 + 1) % 2147483647) AS hs FROM th1),
        |bits AS (SELECT doc_id,
@@ -642,7 +639,7 @@ object SparkEntry {
   }
 
   private def fingerprintOracleSql: String =
-    s"""$portableTokCte,
+    s"""$tokenHashCte,
        |shg AS (SELECT doc_id,
        |  CASE WHEN len(th) >= 5 THEN list_transform(range(1, len(th) - 3), i -> ${lehmerChainSql(5)})
        |       ELSE []::BIGINT[] END AS shingles FROM th),
@@ -658,7 +655,7 @@ object SparkEntry {
       val b = (a * 48271L + 1L) % M
       s"coalesce(list_min(list_transform(shingles, s -> ($a*s + $b) % 2147483647)), 9223372036854775807)"
     }.mkString("[\n  ", ",\n  ", "]")
-    s"""$portableTokCte,
+    s"""$tokenHashCte,
        |shg AS (SELECT doc_id,
        |  CASE WHEN len(th) >= 3 THEN list_transform(range(1, len(th) - 1), i -> ${lehmerChainSql(3)})
        |       ELSE []::BIGINT[] END AS shingles FROM th),

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -23,85 +21,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * stage STAYS inside whole-stage codegen (a `CodegenFallback` expression
   * would knock the entire stage out of codegen).
   *
-  * Hashing is Spark's own XXH64 (same as the `xxhash64` column function,
-  * seed 42), so typed kernels and column plans agree. Tokenization matches
+  * Hash arithmetic is Lehmer/MINSTD folds in the 2^31-1 field (Park–Miller
+  * 1988 multiplier 48271; glibc LCG multiplier 1103515245 for seed
+  * derivation — both public-domain constants): every intermediate fits i64
+  * with no wraparound, so the DuckDB oracles (`SparkEntry.oracleSql`)
+  * reproduce the raw sketch values with BIGINT arithmetic (same scheme as
+  * SrpBucketExpr's plane matrix). Tokenization matches
   * `split(lower(text), "\\s+")` with empties dropped: ASCII whitespace bytes
   * are safe to scan for directly in UTF-8 (multi-byte code points never
   * contain ASCII bytes).
   */
 object SketchKernels {
 
-  final val Seed = 42L
+  final val LehmerMod = 2147483647L // 2^31 - 1
 
   @inline private def isWs(b: Byte): Boolean = b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
-  /** xxhash64 of each whitespace token of `lower(text)`, in order. */
+  /** Per-token Lehmer fold over the CODE POINTS of each whitespace token of
+    * `lower(text)`, in order: h = (h * 48271 + cp) mod (2^31-1). */
   def tokenHashes(text: UTF8String): Array[Long] = {
-    val lower = text.toLowerCase
-    val base = lower.getBaseObject
-    val off = lower.getBaseOffset
-    val len = lower.numBytes
-    var out = new Array[Long](math.max(8, len / 6))
-    var n = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(Platform.getByte(base, off + i))) i += 1
-      val start = i
-      while (i < len && !isWs(Platform.getByte(base, off + i))) i += 1
-      if (i > start) {
-        if (n == out.length) out = java.util.Arrays.copyOf(out, n * 2)
-        out(n) = XXH64.hashUnsafeBytes(base, off + start, i - start, Seed)
-        n += 1
-      }
-    }
-    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
-  }
-
-  /** 64-bit SimHash (Charikar 2002) over whitespace tokens, one pass: per bit,
-    * sign of the sum of ±1 contributions of token hashes; bit i of the token
-    * hash lands at output bit (63-i) — same layout as the round-1 column fold. */
-  def simhash64(text: UTF8String): Long = simhashFold(tokenHashes(text))
-
-  private def simhashFold(th: Array[Long]): Long = {
-    val counts = new Array[Int](64)
-    var t = 0
-    while (t < th.length) {
-      val h = th(t)
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
-        i += 1
-      }
-      t += 1
-    }
-    var acc = 0L
-    var i = 0
-    while (i < 64) {
-      acc = (acc << 1) | (if (counts(i) > 0) 1L else 0L)
-      i += 1
-    }
-    acc
-  }
-
-  // -------------------------------------------------------------------
-  // Portable (oracle-mode) hash scheme. The engine-default token hash is
-  // Spark's XXH64, which no other engine reproduces — so the sketch queries
-  // historically settled for rows-only driver checks. Oracle mode swaps ONLY
-  // the hash arithmetic for Lehmer/MINSTD folds in the 2^31-1 field
-  // (Park–Miller 1988 multiplier 48271; glibc LCG multiplier 1103515245 for
-  // seed derivation — both public-domain constants): every intermediate fits
-  // i64 with no wraparound, so a DuckDB oracle reproduces the exact values
-  // with BIGINT arithmetic (same trick as SrpBucketExpr's plane matrix).
-  // Sketch STRUCTURE (tokenization, shingling, band layout, bit fold) is
-  // identical between modes; q_sketch_invariance pins the default mode.
-  // -------------------------------------------------------------------
-
-  final val LehmerMod = 2147483647L // 2^31 - 1
-
-  /** Per-token Lehmer fold over the CODE POINTS of `lower(text)`:
-    * h = (h * 48271 + cp) mod (2^31-1). Same ASCII-\s tokenization as
-    * [[tokenHashes]]. */
-  def tokenHashesPortable(text: UTF8String): Array[Long] = {
     val lower = text.toLowerCase
     val base = lower.getBaseObject
     val off = lower.getBaseOffset
@@ -137,37 +75,58 @@ object SketchKernels {
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
-  /** Widen a 31-bit portable token hash to 62 live bits for the simhash bit
-    * fold: h1 = (h*48271+1) mod M, h2 = (h1*48271+1) mod M, h64 = h1*2^31+h2
-    * (bits 62-63 always 0 — their simhash positions fold to 0 in both
-    * engines, harmlessly). */
+  /** Widen a 31-bit token hash to 62 live bits for the simhash bit fold:
+    * h1 = (h*48271+1) mod M, h2 = (h1*48271+1) mod M, h64 = h1*2^31+h2. */
   @inline private def widen62(h: Long): Long = {
     val h1 = (h * 48271L + 1L) % LehmerMod
     val h2 = (h1 * 48271L + 1L) % LehmerMod
     (h1 << 31) | h2
   }
 
-  def simhash64Portable(text: UTF8String): Long = {
-    val th = tokenHashesPortable(text)
+  /** 64-bit SimHash (Charikar 2002) over whitespace tokens, one pass: per bit,
+    * sign of the sum of ±1 contributions of the widened token hashes; bit i
+    * of the token hash lands at output bit (63-i) — same layout as the
+    * round-1 column fold. The widened hashes have 62 live bits (bits 62-63
+    * are always 0), so output bits 0 and 1 are always 0: 62 bits of
+    * signature, in the engine and in the DuckDB oracle alike. */
+  def simhash64(text: UTF8String): Long = {
+    val th = tokenHashes(text)
+    val counts = new Array[Int](64)
+    var t = 0
+    while (t < th.length) {
+      val h = widen62(th(t))
+      var i = 0
+      while (i < 64) {
+        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
+        i += 1
+      }
+      t += 1
+    }
+    var acc = 0L
     var i = 0
-    while (i < th.length) { th(i) = widen62(th(i)); i += 1 }
-    simhashFold(th)
+    while (i < 64) {
+      acc = (acc << 1) | (if (counts(i) > 0) 1L else 0L)
+      i += 1
+    }
+    acc
   }
 
-  /** Portable k-shingle hash chain: sh = (sh*48271 + th_j) mod M over the k
-    * token hashes. */
-  @inline private def shingleChainPortable(th: Array[Long], i: Int, k: Int): Long = {
+  /** k-shingle hash chain: sh = (sh*48271 + th_j) mod M over the k token
+    * hashes starting at `i`. */
+  @inline private def shingleChain(th: Array[Long], i: Int, k: Int): Long = {
     var sh = 0L
     var j = 0
     while (j < k) { sh = (sh * 48271L + th(i + j)) % LehmerMod; j += 1 }
     sh
   }
 
-  /** Portable minhash: per-seed affine permutation in the 2^31-1 field —
+  /** MinHash signature (Broder 1997): per-seed affine permutation of each
+    * k-shingle hash in the 2^31-1 field —
     * a_h = ((h+1)*1103515245 + 42) mod M, b_h = (a_h*48271 + 1) mod M,
-    * v = (a_h*sh + b_h) mod M (a_h*sh < 2^62: i64-exact). */
-  def minhashSignaturePortable(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val th = tokenHashesPortable(text)
+    * v = (a_h*sh + b_h) mod M (a_h*sh < 2^62: i64-exact); constant work per
+    * seed. Empty shingle set → all-MaxValue signature. */
+  def minhashSignature(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
+    val th = tokenHashes(text)
     val sig = new Array[Long](numHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)
     val as = new Array[Long](numHashes)
@@ -181,7 +140,7 @@ object SketchKernels {
     val n = th.length - k + 1
     var i = 0
     while (i < n) {
-      val sh = shingleChainPortable(th, i, k)
+      val sh = shingleChain(th, i, k)
       h = 0
       while (h < numHashes) {
         val v = (as(h) * sh + bs(h)) % LehmerMod
@@ -193,10 +152,11 @@ object SketchKernels {
     new GenericArrayData(sig)
   }
 
-  /** Portable band keys: kb = (kb*48271 + (sig_j mod M)) mod M over the
-    * band's signature positions (sig_j mod M also covers the empty-shingle
-    * Long.MaxValue sentinel — positive, identical in BIGINT arithmetic). */
-  def bandKeysPortable(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+  /** LSH band keys: kb = (kb*48271 + (sig_j mod M)) mod M over signature
+    * positions [b*rowsPerBand, (b+1)*rowsPerBand); band index is the output
+    * array position. (sig_j mod M also covers the empty-shingle
+    * Long.MaxValue sentinel — positive, identical in BIGINT arithmetic.) */
+  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -212,67 +172,20 @@ object SketchKernels {
     new GenericArrayData(out)
   }
 
-  /** Portable winnowing fingerprint: n smallest distinct portable k-shingle
-    * hashes, ascending. */
-  def fingerprintPortable(text: UTF8String, k: Int, n: Int): ArrayData = {
-    val th = tokenHashesPortable(text)
+  /** Winnowing-style fingerprint: the `n` smallest distinct k-shingle hashes,
+    * ascending (shingle hash as in [[minhashSignature]]). */
+  def fingerprint(text: UTF8String, k: Int, n: Int): ArrayData = {
+    val th = tokenHashes(text)
     val m = th.length - k + 1
     val set = new java.util.HashSet[java.lang.Long]()
     var i = 0
-    while (i < m) { set.add(shingleChainPortable(th, i, k)); i += 1 }
+    while (i < m) { set.add(shingleChain(th, i, k)); i += 1 }
     val arr = new Array[Long](set.size)
     val it = set.iterator()
     i = 0
     while (it.hasNext) { arr(i) = it.next(); i += 1 }
     java.util.Arrays.sort(arr)
     new GenericArrayData(java.util.Arrays.copyOf(arr, math.min(n, arr.length)))
-  }
-
-  /** MinHash signature (Broder 1997): shingle hash = XXH64 chain over k
-    * consecutive token hashes; per-seed value = one XXH64 of the shingle hash
-    * (constant work per seed — NOT a re-pass over the shingle). Empty shingle
-    * set → all-MaxValue signature (same convention as round 1). */
-  def minhashSignature(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val th = tokenHashes(text)
-    val sig = new Array[Long](numHashes)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val seeds = new Array[Long](numHashes)
-    var h = 0
-    while (h < numHashes) { seeds(h) = XXH64.hashInt(h, Seed); h += 1 }
-    val n = th.length - k + 1
-    var i = 0
-    while (i < n) {
-      var sh = Seed
-      var j = 0
-      while (j < k) { sh = XXH64.hashLong(th(i + j), sh); j += 1 }
-      h = 0
-      while (h < numHashes) {
-        val v = XXH64.hashLong(sh, seeds(h))
-        if (v < sig(h)) sig(h) = v
-        h += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  /** LSH band keys: key b = XXH64 chain over signature positions
-    * [b*rowsPerBand, (b+1)*rowsPerBand), seeded per band. Band index is the
-    * output array position. */
-  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = XXH64.hashInt(b, Seed)
-      var j = 0
-      while (j < rowsPerBand) {
-        h = XXH64.hashLong(sig.getLong(b * rowsPerBand + j), h)
-        j += 1
-      }
-      out(b) = h
-      b += 1
-    }
-    new GenericArrayData(out)
   }
 
   /** Whitespace tokens of `lower(text)` as strings (for exact set sketches).
@@ -328,29 +241,6 @@ object SketchKernels {
     if (uni == 0) 0.0 else inter.toDouble / uni.toDouble
   }
 
-  /** Winnowing-style fingerprint: the `n` smallest distinct k-shingle hashes,
-    * ascending (shingle hash = XXH64 chain over token hashes, as in
-    * [[minhashSignature]]). */
-  def fingerprint(text: UTF8String, k: Int, n: Int): ArrayData = {
-    val th = tokenHashes(text)
-    val m = th.length - k + 1
-    val set = new java.util.HashSet[java.lang.Long]()
-    var i = 0
-    while (i < m) {
-      var sh = Seed
-      var j = 0
-      while (j < k) { sh = XXH64.hashLong(th(i + j), sh); j += 1 }
-      set.add(sh)
-      i += 1
-    }
-    val arr = new Array[Long](set.size)
-    val it = set.iterator()
-    i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    java.util.Arrays.sort(arr)
-    new GenericArrayData(java.util.Arrays.copyOf(arr, math.min(n, arr.length)))
-  }
-
   /** Fraction of agreeing positions between two equal-length signatures. */
   def sigAgreement(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -365,49 +255,40 @@ object SketchKernels {
   }
 }
 
-/** `simhash64(text)` — LongType. `portable` selects the oracle-mode hash. */
-case class SimHash64Expr(child: Expression, portable: Boolean = false)
-    extends UnaryExpression {
+/** `simhash64(text)` — LongType. */
+case class SimHash64Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
-  private def fn: String = if (portable) "simhash64Portable" else "simhash64"
   override def nullSafeEval(input: Any): Any =
-    if (portable) SketchKernels.simhash64Portable(input.asInstanceOf[UTF8String])
-    else SketchKernels.simhash64(input.asInstanceOf[UTF8String])
+    SketchKernels.simhash64(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernels.$fn($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernels.simhash64($c)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** `minhashSignature(text, k, numHashes)` — ArrayType(LongType). */
-case class MinHashSigExpr(child: Expression, k: Int, numHashes: Int,
-    portable: Boolean = false)
+case class MinHashSigExpr(child: Expression, k: Int, numHashes: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  private def fn: String = if (portable) "minhashSignaturePortable" else "minhashSignature"
   override def nullSafeEval(input: Any): Any =
-    if (portable) SketchKernels.minhashSignaturePortable(input.asInstanceOf[UTF8String], k, numHashes)
-    else SketchKernels.minhashSignature(input.asInstanceOf[UTF8String], k, numHashes)
+    SketchKernels.minhashSignature(input.asInstanceOf[UTF8String], k, numHashes)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.$fn($c, $k, $numHashes)")
+      c => s"graft.functions.SketchKernels.minhashSignature($c, $k, $numHashes)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** `bandKeys(signature, bands, rowsPerBand)` — ArrayType(LongType); band index
   * is the array position (posexplode recovers it). */
-case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int,
-    portable: Boolean = false)
+case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  private def fn: String = if (portable) "bandKeysPortable" else "bandKeys"
   override def nullSafeEval(input: Any): Any =
-    if (portable) SketchKernels.bandKeysPortable(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-    else SketchKernels.bandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand)
+    SketchKernels.bandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.$fn($c, $bands, $rowsPerBand)")
+      c => s"graft.functions.SketchKernels.bandKeys($c, $bands, $rowsPerBand)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -426,17 +307,14 @@ case class NgramJaccardExpr(left: Expression, right: Expression, k: Int)
 }
 
 /** `fingerprint(text, k, n)` — ArrayType(LongType), n smallest shingle hashes. */
-case class FingerprintExpr(child: Expression, k: Int, n: Int,
-    portable: Boolean = false)
+case class FingerprintExpr(child: Expression, k: Int, n: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  private def fn: String = if (portable) "fingerprintPortable" else "fingerprint"
   override def nullSafeEval(input: Any): Any =
-    if (portable) SketchKernels.fingerprintPortable(input.asInstanceOf[UTF8String], k, n)
-    else SketchKernels.fingerprint(input.asInstanceOf[UTF8String], k, n)
+    SketchKernels.fingerprint(input.asInstanceOf[UTF8String], k, n)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.SketchKernels.$fn($c, $k, $n)")
+      c => s"graft.functions.SketchKernels.fingerprint($c, $k, $n)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -483,7 +361,7 @@ case class SrpBucketExpr(child: Expression, planes: Int, dim: Int, seed: Long)
   // q_ann_srp stays oracle-checkable. Evaluated once per instance.
   @transient private lazy val planeMatrix: Array[Double] = {
     val m = new Array[Double](planes * dim)
-    val mod = 2147483647L
+    val mod = SketchKernels.LehmerMod
     var p = 0
     while (p < planes) {
       val seedP = ((p + 1).toLong * 1103515245L + seed) % mod
@@ -571,27 +449,4 @@ case class VecSimExpr(left: Expression, right: Expression, mode: String)
   }
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Column-API wrappers for the sketch expressions. */
-object SketchFunctions {
-  private def c(e: Expression): Column = GraftExpressionBridge.column(e)
-  private def e(col: Column): Expression = GraftExpressionBridge.expression(col)
-
-  def simhash64(text: Column, portable: Boolean = false): Column =
-    c(SimHash64Expr(e(text), portable))
-  def minhashSignature(text: Column, k: Int, numHashes: Int,
-      portable: Boolean = false): Column =
-    c(MinHashSigExpr(e(text), k, numHashes, portable))
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-      portable: Boolean = false): Column =
-    c(BandKeysExpr(e(sig), bands, rowsPerBand, portable))
-  def sigAgreement(a: Column, b: Column): Column = c(SigAgreementExpr(e(a), e(b)))
-  def ngramJaccard(a: Column, b: Column, k: Int): Column = c(NgramJaccardExpr(e(a), e(b), k))
-  def fingerprint(text: Column, k: Int, n: Int, portable: Boolean = false): Column =
-    c(FingerprintExpr(e(text), k, n, portable))
-  def srpBucket(emb: Column, planes: Int, dim: Int, seed: Long = 42L): Column =
-    c(SrpBucketExpr(e(emb), planes, dim, seed))
-  def dot(a: Column, b: Column): Column = c(VecSimExpr(e(a), e(b), "dot"))
-  def cosine(a: Column, b: Column): Column = c(VecSimExpr(e(a), e(b), "cosine"))
 }

@@ -1,12 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftExpressionBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Text-analysis and dedup-sketch column functions for large-scale
-  * training-data curation. Everything here is composed from built-in Catalyst
-  * expressions (`functions._`) — codegen'd, no Scala/Python UDFs — so the hot
-  * path stays inside whole-stage codegen at 100 TB.
+  * training-data curation. The token/quality/language functions are composed
+  * from built-in Catalyst expressions (`functions._`); the sketch and vector
+  * functions wrap the single-pass kernel expressions of
+  * `SketchExpressions.scala`. All are codegen'd, no Scala/Python UDFs, so the
+  * hot path stays inside whole-stage codegen at 100 TB.
   *
   * Scale notes per function are inline; the common theme: each sketch is a
   * narrow fixed-width column computed in one projection over the text column
@@ -14,6 +17,9 @@ import org.apache.spark.sql.functions._
   * (band hashes, buckets) rather than on full text.
   */
 object TextFunctions {
+
+  private def c(e: Expression): Column = GraftExpressionBridge.column(e)
+  private def e(col: Column): Expression = GraftExpressionBridge.expression(col)
 
   /** Whitespace tokens (lowercased, empties dropped). */
   def tokens(text: Column): Column =
@@ -58,37 +64,36 @@ object TextFunctions {
     * seed); the signature is `numHashes` longs regardless of document size —
     * this is the column you persist/partition on at 100 TB, never the
     * shingle sets. */
-  def minhashSignature(text: Column, k: Int = 5, numHashes: Int = 32,
-      portable: Boolean = false): Column =
-    SketchFunctions.minhashSignature(text, k, numHashes, portable)
+  def minhashSignature(text: Column, k: Int = 5, numHashes: Int = 32): Column =
+    c(MinHashSigExpr(e(text), k, numHashes))
 
   /** LSH band keys over a minhash signature: `bands` hashes, each over
     * `rowsPerBand` consecutive signature positions; band index = array
     * position (recover with posexplode). Docs sharing any band key are
     * near-dup candidates → join on (band, key), never all-pairs. */
-  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int,
-      portable: Boolean = false): Column =
-    SketchFunctions.bandKeys(signature, bands, rowsPerBand, portable)
+  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
+    c(BandKeysExpr(e(signature), bands, rowsPerBand))
 
   /** Estimated Jaccard similarity from two minhash signatures: fraction of
     * agreeing positions. */
   def minhashJaccard(sigA: Column, sigB: Column): Column =
-    SketchFunctions.sigAgreement(sigA, sigB)
+    c(SigAgreementExpr(e(sigA), e(sigB)))
 
   /** Exact n-gram Jaccard between two texts (for verification of candidate
     * pairs — runs only on the LSH-candidate slice, never all pairs). Exact
     * string-set semantics (|A∩B|/|A∪B| over distinct space-joined shingles),
     * one kernel pass per text ([[NgramJaccardExpr]]). */
   def ngramJaccard(a: Column, b: Column, k: Int = 3): Column =
-    SketchFunctions.ngramJaccard(a, b, k)
+    c(NgramJaccardExpr(e(a), e(b), k))
 
   /** 64-bit SimHash (Charikar 2002) over whitespace tokens: per bit, the sign
     * of the sum of ±1 contributions of token hashes. One single-pass codegen
     * kernel per row ([[SimHash64Expr]]) — the round-1 64-aggregate column fold
     * re-tokenized the text 64× in interpreted eval and was the bench's prime
-    * scale-killer. Near-dups then compare by hamming distance on a long. */
-  def simhash64(text: Column, portable: Boolean = false): Column =
-    SketchFunctions.simhash64(text, portable)
+    * scale-killer. Near-dups then compare by hamming distance on a long.
+    * 62 live bits: output bits 0 and 1 are always 0 (see
+    * [[SketchKernels.simhash64]]). */
+  def simhash64(text: Column): Column = c(SimHash64Expr(e(text)))
 
   /** Hamming distance between two simhash longs. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -96,23 +101,16 @@ object TextFunctions {
   /** Rolling-hash document fingerprint (winnowing-style): the `n` smallest
     * distinct k-shingle hashes, ascending — a compact order-invariant sketch
     * (single-pass kernel, [[FingerprintExpr]]). */
-  def fingerprint(text: Column, k: Int = 5, n: Int = 8,
-      portable: Boolean = false): Column =
-    SketchFunctions.fingerprint(text, k, n, portable)
+  def fingerprint(text: Column, k: Int = 5, n: Int = 8): Column =
+    c(FingerprintExpr(e(text), k, n))
 
   // ---------- quality scoring (integer components — oracle-friendly) ----------
 
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.!?,;:]", ""))
 
-  def letterCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "(?U)\\p{L}", ""))
-
   def digitCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "(?U)\\p{N}", ""))
-
-  def upperCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "(?U)\\p{Lu}", ""))
 
   def stopwordCount(text: Column): Column = {
     import graft.operators.Segregate.Stopwords
@@ -155,13 +153,13 @@ object TextFunctions {
 
   /** Dot product of two numeric-array columns — one-pass codegen kernel with
     * double accumulation left-to-right (DuckDB-oracle-matchable). */
-  def dot(a: Column, b: Column): Column = SketchFunctions.dot(a, b)
+  def dot(a: Column, b: Column): Column = c(VecSimExpr(e(a), e(b), "dot"))
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity — one fused pass computing dot and both norms
     * ([[VecSimExpr]]); 0.0 when either vector is all-zero. */
-  def cosineSimilarity(a: Column, b: Column): Column = SketchFunctions.cosine(a, b)
+  def cosineSimilarity(a: Column, b: Column): Column = c(VecSimExpr(e(a), e(b), "cosine"))
 
   /** Signed-random-projection LSH bucket for cosine ANN: the sign pattern of
     * `planes` pseudo-random hyperplane dot products, packed into a long.
@@ -171,5 +169,5 @@ object TextFunctions {
     * expression instance — per row this is a pure `planes × dim` multiply
     * loop ([[SrpBucketExpr]]). */
   def srpBucket(embedding: Column, planes: Int, dim: Int, seed: Long = 42L): Column =
-    SketchFunctions.srpBucket(embedding, planes, dim, seed)
+    c(SrpBucketExpr(e(embedding), planes, dim, seed))
 }

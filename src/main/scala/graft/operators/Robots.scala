@@ -26,17 +26,4 @@ object Robots {
       val path = coalesce(parse_url(substring_index(url, "#", 1), lit("PATH")), lit(""))
       rules.map(r => host === r.host && path.startsWith(r.path_prefix)).reduce(_ || _)
     }
-
-  /** Typed mirror of [[denied]] for the sequential oracle / tests. */
-  def deniedStr(url: String, host: String, rules: Seq[RobotsRule]): Boolean = {
-    if (rules.isEmpty) return false
-    val noFrag = url.takeWhile(_ != '#')
-    val schemeEnd = noFrag.indexOf("://")
-    val hostStart = if (schemeEnd < 0) 0 else schemeEnd + 3
-    val pathStart = noFrag.indexOf('/', hostStart)
-    val path =
-      if (pathStart < 0) ""
-      else noFrag.substring(pathStart).takeWhile(c => c != '?' && c != '#')
-    rules.exists(r => host == r.host && path.startsWith(r.path_prefix))
-  }
 }

@@ -216,8 +216,9 @@ object Segregate {
     * "reached the threshold", never the exact counts — the two
     * `Pattern.split`s per paragraph were 83% of the paragraph stage's cpu at
     * ~10M paragraphs per crawl wave. Byte-wise classification is exact: all
-    * sentence delimiters are ASCII ('.', '!', '?', ' ', '\t'..'\r') and
-    * every byte of a multi-byte UTF-8 sequence is ≥ 0x80. The word leg's
+    * sentence delimiters are ASCII ('.', '!', '?', ' ', '\t'..'\r') but a
+    * final U+0085/U+2028/U+2029 (matched as a whole sequence), and every
+    * byte of a multi-byte UTF-8 sequence is ≥ 0x80. The word leg's
     * tokens are Unicode classes (\p{L}, toLowerCase — İ lowercases to two
     * chars), so at the first byte ≥ 0x80 it splits the decoded slice with
     * the reference's regex instead (the corpus is ASCII: a cold path).
@@ -267,7 +268,10 @@ object Segregate {
 
   /** The sentence leg: counts boundary-delimited non-blank segments up to
     * `minSents` (≥ 0x80 bytes classify as content, as their decoded chars
-    * would). */
+    * would). The regex's `$` also matches before a final line terminator
+    * (U+0085, U+2028, U+2029): a punct run followed by exactly one of those
+    * at the end of the slice is a boundary, and the terminator itself is a
+    * last, non-blank segment. */
   private def sentenceScanBytesAtLeast(b: Array[Byte], start: Int, end: Int, minSents: Int): Boolean = {
     @inline def isPunct(c: Int) = c == '.' || c == '!' || c == '?'
     @inline def isWs(c: Int) = c == ' ' || (c >= '\t' && c <= '\r')
@@ -284,6 +288,9 @@ object Segregate {
           if (segHasContent) { sents += 1; if (sents >= minSents) return true }
           segHasContent = false
           i = j
+        } else if (isFinalTerminator(b, j, end)) {
+          if (segHasContent) sents += 1
+          return sents + 1 >= minSents
         } else { segHasContent = true; i = j }
       } else {
         if (c > ' ') segHasContent = true
@@ -293,4 +300,10 @@ object Segregate {
     if (segHasContent) sents += 1
     sents >= minSents
   }
+
+  /** `[j, end)` is exactly one UTF-8 U+0085, U+2028 or U+2029. */
+  private def isFinalTerminator(b: Array[Byte], j: Int, end: Int): Boolean =
+    (end - j == 2 && (b(j) & 0xFF) == 0xC2 && (b(j + 1) & 0xFF) == 0x85) ||
+      (end - j == 3 && (b(j) & 0xFF) == 0xE2 && (b(j + 1) & 0xFF) == 0x80 &&
+        ((b(j + 2) & 0xFF) == 0xA8 || (b(j + 2) & 0xFF) == 0xA9))
 }

@@ -30,13 +30,12 @@ object Similarity {
       shingleK: Int = 5,
       numHashes: Int = 32,
       bands: Int = 8,
-      threshold: Double = 0.7,
-      portable: Boolean = false): DataFrame = {
+      threshold: Double = 0.7): DataFrame = {
     val rowsPerBand = numHashes / bands
     val sigs = docs
       .select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("sig", minhashSignature(col("text"), shingleK, numHashes, portable))
-      .withColumn("bk", lshBandKeys(col("sig"), bands, rowsPerBand, portable))
+      .withColumn("sig", minhashSignature(col("text"), shingleK, numHashes))
+      .withColumn("bk", lshBandKeys(col("sig"), bands, rowsPerBand))
       .select(col("id"), col("sig"), posexplode(col("bk")).as(Seq("band", "key")))
       // One signature pass, not two: a plain self-join duplicates the whole
       // sketch subtree (each side — or the broadcast build — re-tokenizes and

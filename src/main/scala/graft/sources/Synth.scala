@@ -102,9 +102,6 @@ object Synth {
   def docPageHref(cfg: SynthConfig, c: Int, caseId: Long, junk: Long): String =
     s"https://${courtHost(c)}/view?case=$caseId&ID=${java.lang.Long.toUnsignedString(junk)}"
 
-  def docPageCanonical(c: Int, caseId: Long): String =
-    s"https://${courtHost(c)}/view?case=$caseId"
-
   def pdfUrl(cfg: SynthConfig, c: Int, fileId: Long): String = {
     // ~1/8 of PDFs live on a rare mirror host (Zipf tail); the rest share the
     // court's single dominant host — the skew the salted partitioner must absorb.

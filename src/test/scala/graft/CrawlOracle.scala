@@ -34,6 +34,20 @@ object CrawlOracle {
       mergeRequests: Seq[(String, String)], // (case_number, canonical_url)
       paragraphs: Int)                      // filtered paragraph count
 
+  /** Typed mirror of `Robots.denied`: true when (host, url path) matches a
+    * disallow rule. Empty rules → never denied. */
+  def deniedStr(url: String, host: String, rules: Seq[RobotsRule]): Boolean = {
+    if (rules.isEmpty) return false
+    val noFrag = url.takeWhile(_ != '#')
+    val schemeEnd = noFrag.indexOf("://")
+    val hostStart = if (schemeEnd < 0) 0 else schemeEnd + 3
+    val pathStart = noFrag.indexOf('/', hostStart)
+    val path =
+      if (pathStart < 0) ""
+      else noFrag.substring(pathStart).takeWhile(c => c != '?' && c != '#')
+    rules.exists(r => host == r.host && path.startsWith(r.path_prefix))
+  }
+
   // pure-Scala mirrors of the engine's renderings (Segregate.render*)
   def renderPlain(spans: Seq[Span]): String =
     spans.sortBy(_.offset).filter(s => s.kind == "text" || s.kind == "heading")
@@ -88,7 +102,7 @@ object CrawlOracle {
       // raw frontier, and keep-first now happens later, inside the
       // politeness buckets (post-salting)
       val hostCounts = frontier.filter(e => !seen.contains(e.canonical) &&
-          !graft.operators.Robots.deniedStr(e.url, e.host, cfg.robots))
+          !deniedStr(e.url, e.host, cfg.robots))
         .groupBy(_.host).view.mapValues(_.size).toMap
       // keep-first per canonical by (priority, url) over ALL copies (flagged
       // ones included — the engine's bucket-local scan dedups before looking
@@ -96,7 +110,7 @@ object CrawlOracle {
       val pending = frontier.groupBy(_.canonical).values
         .map(_.minBy(e => (e.priority, e.url))).toVector
       val novel = pending.filter(e => !seen.contains(e.canonical) &&
-        !graft.operators.Robots.deniedStr(e.url, e.host, cfg.robots))
+        !deniedStr(e.url, e.host, cfg.robots))
       def saltFactor(h: String): Int =
         math.min(cfg.saltMax, math.max(1, math.max(
           math.ceil(hostCounts(h).toDouble / cfg.budgetPerHost).toInt,

@@ -179,7 +179,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(log === oLog)
     // no fetched URL may match a disallow rule
     log.foreach { case (_, host, _, _, canonical, _, _) =>
-      assert(!graft.operators.Robots.deniedStr(canonical, host, rcfg.robots),
+      assert(!CrawlOracle.deniedStr(canonical, host, rcfg.robots),
         s"robots-denied URL fetched: $canonical")
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Hashing, WireFunctions}
+import graft.functions.WireFunctions
 import graft.model.{Doc, Span}
 import graft.operators.Segregate
 import graft.sources.{Synth, SynthConfig, Wire}
@@ -14,13 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class HashingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
-
-  test("Hashing.xxhash64Str equals the xxhash64 column function") {
-    val vals = Seq("", "a", "hello world", "IN THE HIGH COURT", "ü¶€ unicode")
-    val fromCol = vals.toDF("s").select(xxhash64($"s").as("h")).as[Long].collect()
-    val fromScala = vals.map(s => Hashing.xxhash64Str(s))
-    assert(fromCol.toSeq === fromScala)
-  }
 
   test("typed renderings equal Column renderings on synth docs") {
     val cfg = SynthConfig()

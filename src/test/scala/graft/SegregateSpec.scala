@@ -138,6 +138,8 @@ class SegregateSpec extends AnyFunSuite {
       "é", "café. thé. ok.", "  padded  ", "\t\ntabs.\nnew. lines.",
       // İ lowercases to i + U+0307 (a mark, so a token split); ß stays ß
       "İstanbul İNDİA the İ " * 8, "straße ßtraße Maß THE " * 8, "İ. ß. ok.",
+      // the regex's $ also matches before a final U+0085/U+2028/U+2029
+      "One. Two.\u0085", "a. b.\u2028", "x! y? z.\u2029",
       stops.mkString(" "), (stops.take(20) ++ Seq("contentword")).mkString(" ") * 3)
     // deterministic pseudo-random strings: punct/ws-heavy chars, and
     // stopword/content/non-ASCII tokens. BMP-only: indexing by char would
@@ -148,7 +150,7 @@ class SegregateSpec extends AnyFunSuite {
       h = h * 6364136223846793005L + 1442695040888963407L
       Math.floorMod(h, bound.toLong).toInt
     }
-    val alphabet = "abc theof .!?üéİß\t\n."
+    val alphabet = "abc theof .!?üéİß\t\n.\u0085\u2028\u2029"
     val chars = (1 to 400).map(_ => (0 until next(60)).map(_ => alphabet(next(alphabet.length))).mkString)
     val vocab = stops ++ Seq("alpha", "beta", "verylongcontentword", "x", ".", "!", "  ", "\t",
       "İkinci", "Straße", "ß")

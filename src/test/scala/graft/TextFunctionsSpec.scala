@@ -78,6 +78,88 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(fp1 === fp1.sorted)
   }
 
+  /** Plain-Scala Lehmer reference of the sketch kernels, written the way the
+    * DuckDB oracle SQL in `SparkEntry` (`tokenHashCte` and the simhash /
+    * minhash / fingerprint oracles) computes them. */
+  private object LehmerRef {
+    val M = 2147483647L
+    def tokenHashes(text: String): Seq[Long] =
+      text.toLowerCase(java.util.Locale.ROOT).split("[\t\n\u000B\f\r ]+").toSeq
+        .filter(_.nonEmpty)
+        .map(t => t.codePoints().toArray.foldLeft(0L)((h, cp) => (h * 48271 + cp) % M))
+    def simhash64(text: String): Long = {
+      val hs = tokenHashes(text).map { h =>
+        val g = (h * 48271 + 1) % M
+        g * 2147483648L + (g * 48271 + 1) % M
+      }
+      (0 until 64).foldLeft(0L) { (acc, i) =>
+        val sum = hs.map(h => ((h >> i) & 1) * 2 - 1).sum
+        (acc << 1) | (if (sum > 0) 1L else 0L)
+      }
+    }
+    def shingles(text: String, k: Int): Seq[Long] =
+      tokenHashes(text).sliding(k).filter(_.size == k)
+        .map(w => w.tail.foldLeft(w.head)((sh, h) => (sh * 48271 + h) % M)).toSeq
+    def minhash(text: String, k: Int, numHashes: Int): Seq[Long] = {
+      val sh = shingles(text, k)
+      (0 until numHashes).map { h =>
+        val a = ((h + 1).toLong * 1103515245L + 42L) % M
+        val b = (a * 48271 + 1) % M
+        if (sh.isEmpty) Long.MaxValue else sh.map(s => (a * s + b) % M).min
+      }
+    }
+    def bandKeys(sig: Seq[Long], bands: Int, rowsPerBand: Int): Seq[Long] =
+      sig.grouped(rowsPerBand).take(bands)
+        .map(_.foldLeft(0L)((kb, v) => (kb * 48271 + v % M) % M)).toSeq
+    def fingerprint(text: String, k: Int, n: Int): Seq[Long] =
+      shingles(text, k).distinct.sorted.take(n)
+  }
+
+  test("sketch kernels equal the plain-Scala Lehmer reference (null, empty, short, UTF-8)") {
+    val texts = Seq[String](
+      null, "", "one two", "\t  \n",
+      "The quick brown fox jumps over the lazy dog. The quick brown fox again!",
+      "café über naïve façade résumé ñandú smörgåsbord crème brûlée déjà vu",
+      "日本語 の テキスト を 分割 する 東京 大阪 京都 札幌 福岡",
+      "𐄇 𝄞 😀 🚀 𝔘𝔫𝔦 emoji 😀 mixed 𐄇 tokens 🚀 here",
+      "mixed ASCII and ü 日 😀 in one token: aü日😀b aü日😀b aü日😀b aü日😀b")
+    val input = texts.zipWithIndex.toDF("t", "i")
+    def sketches(df: org.apache.spark.sql.DataFrame) = df
+      .select($"i", TF.simhash64($"t").as("sh"),
+        TF.minhashSignature($"t").as("sig5"),
+        TF.minhashSignature($"t", 3, 32).as("sig3"),
+        TF.fingerprint($"t").as("fp"))
+      .select($"*",
+        TF.lshBandKeys($"sig5", 8, 4).as("bk8"),
+        TF.lshBandKeys($"sig3", 16, 2).as("bk16"))
+    // over a local relation the optimizer folds the projection through
+    // nullSafeEval; over a shuffle it runs the generated code
+    for ((mode, in) <- Seq("eval" -> input, "codegen" -> input.repartition(2))) {
+      sketches(in).collect().foreach { r =>
+        val i = r.getInt(0)
+        val t = texts(i)
+        val shown = s"$mode #$i"
+        if (t == null) (1 until r.length).foreach(c => assert(r.isNullAt(c), shown))
+        else {
+          assert(r.getLong(1) === LehmerRef.simhash64(t), s"simhash $shown")
+          val sig5 = r.getSeq[Long](2)
+          val sig3 = r.getSeq[Long](3)
+          assert(sig5 === LehmerRef.minhash(t, 5, 32), s"minhash k=5 $shown")
+          assert(sig3 === LehmerRef.minhash(t, 3, 32), s"minhash k=3 $shown")
+          assert(r.getSeq[Long](4) === LehmerRef.fingerprint(t, 5, 8), s"fingerprint $shown")
+          assert(r.getSeq[Long](5) === LehmerRef.bandKeys(sig5, 8, 4), s"bands 8x4 $shown")
+          assert(r.getSeq[Long](6) === LehmerRef.bandKeys(sig3, 16, 2), s"bands 16x2 $shown")
+          if (LehmerRef.tokenHashes(t).size < 5) {
+            assert(sig5.forall(_ == Long.MaxValue), s"short text signature $shown")
+            assert(r.getSeq[Long](4).isEmpty, s"short text fingerprint $shown")
+          }
+          // 62 live bits: output bits 0 and 1 are always 0
+          assert((r.getLong(1) & 3L) === 0L, s"simhash low bits $shown")
+        }
+      }
+    }
+  }
+
   test("langId picks the marker language; und when no markers") {
     val df = Seq(
       ("the cat and the dog is in that house with food", "en"),
