@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{TextFunctions => TF, Urls, WireFunctions, WireParagraphsExpr}
-import graft.model.Doc
 import graft.operators.{Dedup, Multimodal, Segregate, Similarity}
 import graft.sources.{Synth, SynthConfig}
 
@@ -61,15 +60,18 @@ object SparkEntry {
 
   /** Synthetic interleaved-span docs (the input-hint shape) — deterministic,
     * derived per-row from Synth arithmetic; used by span/crawl operators.
-    * [[writeSynthInputs]] persists the SAME docs to [[SynthDocsPath]] so the
-    * DuckDB oracle can read the identical input via `read_parquet` (the
-    * queries keep generating in-flight — self-contained at bench time). */
-  private def synthDocs(spark: SparkSession, n: Int = 200): DataFrame = {
+    * Doc `SYN/i` carries the spans of content `i` as the crawl stores them:
+    * the pdf fetch payload (`Synth.pdfPayload`) decoded by `wireSpans`, so
+    * `spans` has the crawl docs table's type. [[writeSynthInputs]] persists
+    * the SAME docs to [[SynthDocsPath]] so the DuckDB oracle can read the
+    * identical input via `read_parquet` (the queries keep generating
+    * in-flight — self-contained at bench time). */
+  private[graft] def synthDocs(spark: SparkSession, n: Int = 200): DataFrame = {
     import spark.implicits._
     val cfg = SynthConfig()
     spark.range(n.toLong).as[Long]
-      .map(i => Doc(s"SYN/$i", Synth.spansOf(cfg, i)))
-      .toDF("doc_id", "spans")
+      .map(i => (s"SYN/$i", Synth.pdfPayload(cfg, i, s"SYN/$i")))
+      .select($"_1".as("doc_id"), WireFunctions.wireSpans($"_2").as("spans"))
   }
 
   /** Fixed absolute location of the persisted synth inputs (oracle side). */

@@ -287,7 +287,8 @@ object Politeness {
     * codegen expression (no physical re-sort — order is inherited from the
     * scheduler drain's per-bucket contiguity, see the in-method note)
     * ([[graft.functions.SynthFetchExpr]] — byte-direct `Synth.fetchEncoded`
-    * inside, bit-equal to fetch+encode per HashingSpec) producing the
+    * inside, bit-equal to the src/test oracle `SynthOracle.fetch` +
+    * `PayloadOracle.encode` per HashingSpec) producing the
     * (status, kind, bytes, latencyMicros, doc_id, payload) struct, flattened
     * to the exact schema the typed encoder used to emit. The flatten stays a
     * SEPARATE projection: CollapseProject keeps multi-referenced non-cheap

@@ -537,6 +537,12 @@ object Crawler {
       .withColumn("url_hash", Urls.urlHash($"canonical_url"))
       .withColumn("host", Urls.host($"url"))
       .persist()
+    // Fill the cache with one action before its first readers: the judgment
+    // routing and the next-frontier write read it from concurrent jobs, and
+    // two tasks racing to fill the same cache block leave one idle until the
+    // other finishes ("Block rdd_N_0 already exists"). Not in pdf-only
+    // rounds, where the frame is an empty LocalRelation.
+    if (!pdfOnly) named("discoveries")(discoveredDF.count())
 
     // judgment rows (listing discoveries carry case metadata)
     val judgRaw = discoveredDF.filter($"case_number".isNotNull)

@@ -128,22 +128,6 @@ object Snapshots {
     Files.move(tmp, manifestPath(dir, round), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Write the round's tables, then commit atomically via manifest rename.
-    * Table counts come from parquet footers (zero extra Spark jobs). Returns
-    * the counts. `lineage` carries the per-round report rendered into the
-    * manifest (north rule: per-partition lineage + metrics). */
-  def commit(
-      dir: String,
-      round: Int,
-      tables: Map[String, DataFrame],
-      lineage: Map[String, String]): Map[String, Long] = {
-    val counts = tables.map { case (name, df) =>
-      name -> writeTable(dir, round, name, df)
-    }
-    commitManifest(dir, round, counts, lineage)
-    counts
-  }
-
   /** Latest committed version of a full (rewritten-per-round) table. */
   def readLatest(spark: SparkSession, dir: String, table: String,
       schema: Option[StructType] = None): Option[DataFrame] =

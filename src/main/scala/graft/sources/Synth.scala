@@ -97,11 +97,6 @@ object Synth {
   def listingUrl(c: Int, q: Int, page: Int): String =
     s"https://${courtHost(c)}/search?query=${queryOf(null, q).replace(' ', '+')}&qid=$q&page=$page"
 
-  /** Doc-page href as it appears in a listing — carries a junk ID= param that
-    * varies per (page,rank) discovery so canonicalization is load-bearing. */
-  def docPageHref(cfg: SynthConfig, c: Int, caseId: Long, junk: Long): String =
-    s"https://${courtHost(c)}/view?case=$caseId&ID=${java.lang.Long.toUnsignedString(junk)}"
-
   def pdfUrl(cfg: SynthConfig, c: Int, fileId: Long): String = {
     // ~1/8 of PDFs live on a rare mirror host (Zipf tail); the rest share the
     // court's single dominant host — the skew the salted partitioner must absorb.
@@ -185,13 +180,8 @@ object Synth {
   def baseIdOf(cfg: SynthConfig, contentId: Long): Long =
     Rng.bounded(Rng.mix(cfg.seed, 0xBA5EL, contentId), cfg.baseSpace)
 
-  def caseNumber(cfg: SynthConfig, c: Int, caseId: Long): String = {
-    val n = Rng.bounded(Rng.mix(cfg.seed, 0x11L, caseId), 99999L) + 1
-    val yr = 2010 + Rng.bounded(Rng.mix(cfg.seed, 0x12L, caseId), 13L)
-    s"${courtName(c)} $n/$yr"
-  }
-
-  private def words(h0: Long, n: Int): String = {
+  /** `n` vocabulary words seeded by `h0`, space-separated. */
+  private[graft] def words(h0: Long, n: Int): String = {
     val sb = new StringBuilder
     var h = h0
     var i = 0
@@ -202,67 +192,6 @@ object Synth {
       i += 1
     }
     sb.toString
-  }
-
-  def titleOf(cfg: SynthConfig, caseId: Long): String = {
-    val h = Rng.mix(cfg.seed, 0x717L, caseId)
-    words(h, 3 + (Rng.bounded(h, 4L)).toInt).toUpperCase + " VS " +
-      words(Rng.mix64(h ^ 0x5AL), 2 + (Rng.bounded(h, 3L)).toInt).toUpperCase
-  }
-
-  def dateOf(cfg: SynthConfig, caseId: Long): String = {
-    val h = Rng.mix(cfg.seed, 0xDA7EL, caseId)
-    val yr = 2010 + Rng.bounded(h, 13L)
-    val mo = 1 + Rng.bounded(Rng.mix64(h), 12L)
-    val dy = 1 + Rng.bounded(Rng.mix64(h ^ 1), 28L)
-    f"$yr%04d-$mo%02d-$dy%02d"
-  }
-
-  // ---- Content (interleaved span stream) ----
-
-  /** Spans of a document. Structure mirrors the Adobe element stream observed
-    * in the reference's `dumps/structuredData.json` (252 Text / 26 Image / 60
-    * table-structure elements over 338): a heading, then numbered paragraphs
-    * of 1-3 text spans, with occasional image and table spans interleaved.
-    * The digits in the text derive from contentId while the words derive from
-    * baseId — so the digit-stripping rendering collides contents that share a
-    * baseId (the D3 plant).
-    */
-  def spansOf(cfg: SynthConfig, contentId: Long): Vector[Span] = {
-    val baseId = baseIdOf(cfg, contentId)
-    val hw = Rng.mix(cfg.seed, 0x59A1L, baseId)  // words keyed by baseId
-    val hn = Rng.mix(cfg.seed, 0x59A2L, contentId) // digits/layout keyed by contentId
-    // paragraph count mirrors the reference's published stats (avg 41,
-    // max 248 paras/judgment — /root/reference/README.md:131-133): 20-60
-    val nParas = 20 + Rng.bounded(hw, 41L).toInt
-    val out = Vector.newBuilder[Span]
-    var off = 0
-    def add(kind: String, text: String, media: String): Unit = {
-      out += Span(kind, text, media, off); off += 1
-    }
-    add("heading", s"IN THE HIGH COURT OF ${words(hw ^ 0x1, 2).toUpperCase}", null)
-    var p = 0
-    var himg = hn
-    while (p < nParas) {
-      val hp = Rng.mix64(hw ^ (0x100L + p))
-      val nSpansInPara = 1 + Rng.bounded(hp, 3L).toInt
-      val serial = Rng.bounded(Rng.mix64(hn ^ p), 9000L) + 100 // contentId-dependent digits
-      add("text", s"${p + 1}. " + words(hp ^ 0x2, 18 + Rng.bounded(hp, 20L).toInt) +
-        s" vide order no $serial", null)
-      var s = 1
-      while (s < nSpansInPara) {
-        add("text", words(Rng.mix64(hp ^ (0x200L + s)), 12 + Rng.bounded(hp ^ s, 14L).toInt), null)
-        s += 1
-      }
-      // ~1/4 of paragraphs followed by an image, ~1/5 by a table-structure span
-      himg = Rng.mix64(himg)
-      if (Rng.bounded(himg, 4L) == 0L)
-        add("image", null, s"fig_${contentId}_$p")
-      if (Rng.bounded(Rng.mix64(himg ^ 0x7L), 5L) == 0L)
-        add("table", null, null)
-      p += 1
-    }
-    out.result()
   }
 
   def docIdOf(c: Int, fileId: Long): String = s"${courtName(c)}/$fileId"
@@ -292,14 +221,6 @@ object Synth {
       priority: Long, // total crawl order: court,query,page,rank packed
       caseNumber: String, title: String, date: String, rank: Int)
 
-  final case class FetchOut(
-      status: String, // ok | fail
-      kind: String,   // listing | docpage | pdf | unknown
-      discovered: Seq[Discovered],
-      doc: Option[Doc],
-      bytes: Long,
-      latencyMicros: Long)
-
   def priorityOf(c: Int, q: Int, page: Int, rank: Int, depth: Int): Long =
     (c.toLong << 56) | (q.toLong << 44) | (page.toLong << 24) | (rank.toLong << 8) | depth.toLong
 
@@ -308,64 +229,17 @@ object Synth {
   def failsAt(cfg: SynthConfig, url: String, attempt: Int): Boolean =
     attempt < 2 && Rng.bounded(Rng.mixStr(cfg.seed ^ 0xFA11L, url) ^ attempt.toLong, 1000L) < (cfg.failRate * 1000).toLong
 
-  /** The simulator: pure function (cfg, url, attempt) → result. */
-  def fetch(cfg: SynthConfig, url: String, attempt: Int): FetchOut = {
-    val lat = 200 + Rng.bounded(Rng.mixStr(cfg.seed ^ 0x1A7L, url), 1800L) // 0.2-2ms simulated
-    if (failsAt(cfg, url, attempt))
-      return FetchOut("fail", "unknown", Nil, None, 0L, lat)
-    parseUrl(url) match {
-      case ListingUrl(c, q, page) if c >= 0 && c < cfg.courts && page >= 1 && page <= cfg.pagesPerQuery =>
-        val query = queryOf(cfg, q)
-        val rows = (0 until cfg.rowsPerPage).map { rank =>
-          val caseId = caseIdOf(cfg, c, q, page, rank)
-          val junk = Rng.mix(cfg.seed, 0x1DL, rowIndex(cfg, c, q, page, rank)) // per-discovery junk
-          Discovered(docPageHref(cfg, c, caseId, junk), courtName(c), query, page, 1,
-            priorityOf(c, q, page, rank, 1),
-            caseNumber(cfg, c, caseId), titleOf(cfg, caseId), dateOf(cfg, caseId), rank)
-        }
-        val next =
-          if (page < cfg.pagesPerQuery)
-            Seq(Discovered(listingUrl(c, q, page + 1), courtName(c), query, page + 1, 0,
-              priorityOf(c, q, page + 1, 0, 0), null, null, null, -1))
-          else Nil
-        FetchOut("ok", "listing", rows ++ next, None, 4096L + rows.size * 512L, lat)
-      case DocPageUrl(c, caseId) =>
-        val fid = fileIdOf(cfg, c, caseId)
-        // the reference resolves the intermediate page via regex + netloc rewrite
-        // (`delhi_high_court.py:64-77`); here the resolved URL is the pdf.
-        // priority = -1 means "inherit from the parent frontier entry" — the
-        // crawler replaces it with parent.priority|depth so crawl order stays
-        // the reference's strict court→query→page→row total order.
-        val d = Discovered(pdfUrl(cfg, c, fid), courtName(c), null, -1, 2,
-          -1L, null, null, null, -1)
-        FetchOut("ok", "docpage", Seq(d), None, 2048L, lat)
-      case PdfUrl(c, fid) =>
-        val contentId = contentIdOf(cfg, fid)
-        val spans = spansOf(cfg, contentId)
-        // while-loop, not map().sum: the closure+Option+boxed-Long version
-        // allocated ~3 GB per mega-wave in the fetch hot loop (JFR, round 4)
-        var bytes = 0L
-        var si = 0
-        while (si < spans.length) {
-          val t = spans(si).text
-          bytes += (if (t == null) 256L else t.length.toLong)
-          si += 1
-        }
-        FetchOut("ok", "pdf", Nil, Some(Doc(docIdOf(c, fid), spans)), bytes, lat)
-      case _ => FetchOut("fail", "unknown", Nil, None, 0L, lat)
-    }
-  }
-
-  // ---- Byte-direct fetch (the scale path) ----
+  // ---- Byte-direct fetch: the one payload generator ----
   //
-  // The Span/String object path above is the REFERENCE semantics (and stays
-  // the oracle for specs); the crawl hot loop uses fetchEncoded, which
-  // streams the pdf payload straight into a per-thread Wire.PayloadWriter.
-  // JFR attribution of the 615k-doc mega wave put ~45 GB (of 270 GB total)
-  // of allocation in this generator's StringBuilder growth + toString +
-  // UTF-8 encode chain — pure young-GC tax at exactly the 32-thread level
-  // the scaling gate measures. Byte equality with the object path is pinned
-  // in HashingSpec over every URL kind (pdf, listing, docpage, failure).
+  // Every payload is streamed straight into a per-thread Wire.PayloadWriter,
+  // with no Span/Discovered objects or String text in between. JFR
+  // attribution of the 615k-doc mega wave put ~45 GB (of 270 GB total) of
+  // allocation in the former object generator's StringBuilder growth +
+  // toString + UTF-8 encode chain — pure young-GC tax at exactly the
+  // 32-thread level the scaling gate measures. The object-path generator
+  // (`SynthOracle.fetch`/`spansOf` + `PayloadOracle.encode`, in src/test) is
+  // the oracle: HashingSpec pins byte equality over every URL kind (pdf,
+  // listing, docpage, failure, out-of-range).
 
   private val VocabBytes: Array[Array[Byte]] = Vocab.map(_.getBytes(UTF_8))
   private val VocabUpperBytes: Array[Array[Byte]] = Vocab.map(_.toUpperCase.getBytes(UTF_8))
@@ -407,9 +281,21 @@ object Synth {
     }
   }
 
-  /** Streams `Wire.encode(Nil, Some(Doc(docId, spansOf(cfg, contentId))))`
-    * into `w` without materializing spans; returns the simulated download
-    * size (the same Σ text-length | 256-per-null-text as [[fetch]]). */
+  /** Streams the pdf payload of doc `docId` (no discoveries, one doc) into
+    * `w` without materializing spans; returns the simulated download size
+    * (Σ text length, 256 per null-text span).
+    *
+    * The span structure mirrors the Adobe element stream observed in the
+    * reference's `dumps/structuredData.json` (252 Text / 26 Image / 60
+    * table-structure elements over 338): a heading, then numbered
+    * paragraphs of 1-3 text spans, with occasional image and table spans
+    * interleaved. The paragraph count mirrors the reference's published
+    * stats (avg 41, max 248 paras/judgment — /root/reference/README.md:
+    * 131-133): 20-60. The digits in the text derive from contentId while
+    * the words derive from baseId — so the digit-stripping rendering
+    * collides contents that share a baseId (the D3 plant). Byte-equal to
+    * `PayloadOracle.encode(Nil, Some(Doc(docId, SynthOracle.spansOf(cfg,
+    * contentId))))` (HashingSpec). */
   private[sources] def writePdfPayload(
       w: Wire.PayloadWriter, cfg: SynthConfig, contentId: Long, docId: String): Long = {
     val baseId = baseIdOf(cfg, contentId)
@@ -475,9 +361,10 @@ object Synth {
     bytes
   }
 
-  /** Streams `Wire.encode(rows ++ next, None)` of the listing branch of
-    * [[fetch]] — one Discovered block per case row plus the next-page link —
-    * without materializing Discovered/String objects. The listing wave is
+  /** Streams a listing page's payload — one Discovered block per case row
+    * plus the next-page link, no doc — without materializing
+    * Discovered/String objects; byte-equal to the listing branch of
+    * `SynthOracle.fetch` (HashingSpec). The listing wave is
     * round 1 of every crawl (and the whole of it at high court/query
     * fan-out): its per-discovery URL/title/caseNumber string concat chain
     * profiled as the round-1 GC wall (279 s of GC in one 32-task stage,
@@ -494,7 +381,8 @@ object Synth {
     while (rank < cfg.rowsPerPage) {
       val caseId = caseIdOf(cfg, c, q, page, rank)
       val junk = Rng.mix(cfg.seed, 0x1DL, rowIndex(cfg, c, q, page, rank))
-      // url = docPageHref(cfg, c, caseId, junk)
+      // url: the doc-page href, whose junk ID= param varies per discovery
+      // so canonicalization is load-bearing
       var at = w.reserveInt(); var p0 = w.pos
       w.putRaw(HttpsB); w.putRaw(hostB); w.putRaw(ViewCaseB)
       w.putDigits(caseId); w.putRaw(AmpIdB); w.putDigitsUnsigned(junk)
@@ -504,21 +392,21 @@ object Synth {
       w.putInt(page); w.putInt(1)
       val pr = priorityOf(c, q, page, rank, 1)
       w.putInt((pr >>> 32).toInt); w.putInt(pr.toInt)
-      // caseNumber(cfg, c, caseId)
+      // case number: "<court> <n>/<year>"
       at = w.reserveInt(); p0 = w.pos
       w.putRaw(courtB); w.putByte(' '.toByte)
       w.putDigits(Rng.bounded(Rng.mix(cfg.seed, 0x11L, caseId), 99999L) + 1)
       w.putRaw(SlashB)
       w.putDigits(2010 + Rng.bounded(Rng.mix(cfg.seed, 0x12L, caseId), 13L))
       w.patchInt(at, w.pos - p0)
-      // titleOf(cfg, caseId)
+      // title: "<3-6 WORDS> VS <2-4 WORDS>"
       at = w.reserveInt(); p0 = w.pos
       val ht = Rng.mix(cfg.seed, 0x717L, caseId)
       writeWords(w, ht, 3 + Rng.bounded(ht, 4L).toInt, upper = true)
       w.putRaw(VsB)
       writeWords(w, Rng.mix64(ht ^ 0x5AL), 2 + Rng.bounded(ht, 3L).toInt, upper = true)
       w.patchInt(at, w.pos - p0)
-      // dateOf(cfg, caseId)
+      // date: yyyy-mm-dd
       at = w.reserveInt(); p0 = w.pos
       val hd = Rng.mix(cfg.seed, 0xDA7EL, caseId)
       w.putDigits(2010 + Rng.bounded(hd, 13L))
@@ -546,7 +434,12 @@ object Synth {
     w.putByte(0) // no doc
   }
 
-  /** Streams the docpage branch's single pdf-link discovery. */
+  /** Streams a doc page's payload: its single discovery, the resolved pdf
+    * URL. The reference resolves the intermediate page via regex + netloc
+    * rewrite (`delhi_high_court.py:64-77`). Priority -1 means "inherit from
+    * the parent frontier entry": the crawler replaces it with
+    * parent.priority|depth, so crawl order stays the reference's strict
+    * court→query→page→row total order. */
   private[sources] def writeDocpagePayload(
       w: Wire.PayloadWriter, cfg: SynthConfig, c: Int, caseId: Long): Unit = {
     val fid = fileIdOf(cfg, c, caseId)
@@ -571,32 +464,28 @@ object Synth {
     w.putByte(0) // no doc
   }
 
-  /** [[FetchOut]] already Wire-encoded — what the fetch hot loop consumes. */
+  /** A fetch result with its payload Wire-encoded — what the fetch hot loop
+    * consumes. */
   final case class FetchEnc(status: String, kind: String, docId: String,
       payload: Array[Byte], bytes: Long, latencyMicros: Long)
 
   private val payloadScratch: ThreadLocal[Wire.PayloadWriter] =
     ThreadLocal.withInitial(() => new Wire.PayloadWriter())
 
-  /** [[fetch]] + [[Wire.encode]] fused, with the pdf branch (the payload-
-    * dominant kind) streamed byte-direct. Identical output to the object
-    * path on every field (HashingSpec). */
+  /** The simulator: pure function (cfg, url, attempt) → result, every
+    * payload streamed byte-direct. A URL outside the universe (unparseable,
+    * an out-of-range court or listing page) is a fail row with no payload.
+    * Identical on every field to the object-path oracle in src/test
+    * (`SynthOracle.fetch` + `PayloadOracle.encode`, HashingSpec). */
   def fetchEncoded(cfg: SynthConfig, url: String, attempt: Int): FetchEnc = {
     val lat = 200 + Rng.bounded(Rng.mixStr(cfg.seed ^ 0x1A7L, url), 1800L)
     if (failsAt(cfg, url, attempt)) return FetchEnc("fail", "unknown", null, null, 0L, lat)
     parseUrl(url) match {
-      case PdfUrl(c, fid) =>
-        val w = payloadScratch.get()
-        w.reset()
-        val contentId = contentIdOf(cfg, fid)
-        val docId = docIdOf(c, fid)
-        val bytes = writePdfPayload(w, cfg, contentId, docId)
-        FetchEnc("ok", "pdf", docId, w.result(), bytes, lat)
+      case PdfUrl(c, fid) => pdfFetch(cfg, contentIdOf(cfg, fid), docIdOf(c, fid), lat)
       case ListingUrl(c, q, page) if c >= 0 && c < cfg.courts && page >= 1 && page <= cfg.pagesPerQuery =>
-        // zero discoveries (rowsPerPage == 0 on the last page): the object
-        // path's Wire.encode(Nil, None) returns null so the parquet column
-        // stores a NULL — mirror that instead of a 6-byte empty block, or
-        // the pinned byte-equality and NULL-column invariant both break
+        // zero discoveries (rowsPerPage == 0 on the last page): a NULL
+        // payload, as for every fetch with neither discoveries nor a doc,
+        // instead of a 6-byte empty block
         if (cfg.rowsPerPage + (if (page < cfg.pagesPerQuery) 1 else 0) == 0)
           FetchEnc("ok", "listing", null, null, 4096L, lat)
         else {
@@ -610,12 +499,24 @@ object Synth {
         w.reset()
         writeDocpagePayload(w, cfg, c, caseId)
         FetchEnc("ok", "docpage", null, w.result(), 2048L, lat)
-      case _ =>
-        val out = fetch(cfg, url, attempt)
-        FetchEnc(out.status, out.kind, out.doc.map(_.doc_id).orNull,
-          Wire.encode(out.discovered, out.doc), out.bytes, out.latencyMicros)
+      case _ => FetchEnc("fail", "unknown", null, null, 0L, lat)
     }
   }
+
+  /** The pdf branch of [[fetchEncoded]]: doc `docId` with the spans of
+    * `contentId`. */
+  private def pdfFetch(cfg: SynthConfig, contentId: Long, docId: String, lat: Long): FetchEnc = {
+    val w = payloadScratch.get()
+    w.reset()
+    val bytes = writePdfPayload(w, cfg, contentId, docId)
+    FetchEnc("ok", "pdf", docId, w.result(), bytes, lat)
+  }
+
+  /** The payload a pdf fetch returns for doc `docId` with the spans of
+    * `contentId` — the query surface's synthetic docs
+    * (`SparkEntry.synthDocs`) are these payloads' spans. */
+  def pdfPayload(cfg: SynthConfig, contentId: Long, docId: String): Array[Byte] =
+    pdfFetch(cfg, contentId, docId, 0L).payload
 
   // ---- Catalyst-facing fetch row (fetch-as-expression, round 4) ----
   //

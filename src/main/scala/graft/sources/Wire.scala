@@ -3,8 +3,6 @@ package graft.sources
 import java.io.{ByteArrayInputStream, DataInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.model.Doc
-
 /** Compact binary codec for the fetch payload (discoveries + doc spans).
   *
   * Why this exists: carrying `Seq[Discovered]` + `Option[Doc]` through the
@@ -51,16 +49,17 @@ object Wire {
   @inline private[graft] def corrupt(op: String, detail: String): Nothing =
     throw new CorruptPayloadException(s"corrupt wire payload in $op: $detail")
 
-  /** Reusable cursor-writer over a growable byte scratch, emitting exactly
-    * the [[encode]] wire layout (big-endian ints, length-prefixed UTF-8,
-    * `-1` length = null string). One instance per task thread, `reset()`
-    * between payloads: a producer that knows its content (the synthetic
-    * fetch, a future real extractor) can stream bytes straight into the
-    * payload without materializing Span/Doc objects or String text first —
-    * the object-path `encode` allocated ~45 GB of StringBuilder/encode churn
-    * per 615k-doc wave (JFR round 4), all of it young-GC tax at exactly the
-    * thread count the scaling gate measures. Byte-for-byte equality with the
-    * object path is pinned by HashingSpec. */
+  /** Reusable cursor-writer over a growable byte scratch, emitting the wire
+    * layout (big-endian ints, length-prefixed UTF-8, `-1` length = null
+    * string); the one way src/main builds a payload. One instance per task
+    * thread, `reset()` between payloads: a producer that knows its content
+    * (the synthetic fetch, a future real extractor) streams bytes straight
+    * into the payload without materializing Span/Doc objects or String text
+    * first — an object-path encoder allocated ~45 GB of StringBuilder/encode
+    * churn per 615k-doc wave (JFR round 4), all of it young-GC tax at exactly
+    * the thread count the scaling gate measures. Byte-for-byte equality with
+    * the object-path oracle in src/test (`PayloadOracle.encode`) is pinned by
+    * HashingSpec. */
   final class PayloadWriter(initialCapacity: Int = 1 << 17) {
     private var b = new Array[Byte](initialCapacity)
     private var p = 0
@@ -172,124 +171,6 @@ object Wire {
     }
   }
 
-  /** Encode (discoveries, doc) → bytes. Returns null when both are empty so
-    * the parquet column stores a NULL instead of a 6-byte header per row.
-    *
-    * Exact-size encoding: the payload length is computed first (UTF-8 byte
-    * counts, no materialization) and ONE array is written with a manual
-    * cursor — the ByteArrayOutputStream version allocated a growing buffer
-    * plus a full `toByteArray` copy per fetch, in the crawl's single
-    * heaviest stage (fetch encodes one payload per URL). Byte layout is
-    * identical (big-endian ints, length-prefixed UTF-8), pinned by the
-    * HashingSpec round-trip. */
-  def encode(discovered: Seq[Synth.Discovered], doc: Option[Doc]): Array[Byte] = {
-    if (discovered.isEmpty && doc.isEmpty) return null
-    @inline def strSize(s: String): Int = if (s == null) 4 else 4 + utf8Len(s)
-    var size = 1 + 4 // version + discovery count
-    discovered.foreach { d =>
-      size += strSize(d.url) + strSize(d.court) + strSize(d.query) + 16 +
-        strSize(d.caseNumber) + strSize(d.title) + strSize(d.date) + 4
-    }
-    size += 1 // doc presence flag
-    doc.foreach { d =>
-      size += strSize(d.doc_id) + 4
-      d.spans.foreach(s => size += strSize(s.kind) + strSize(s.text) + strSize(s.media_ref) + 4)
-    }
-    val b = new Array[Byte](size)
-    var p = 0
-    @inline def putInt(v: Int): Unit = {
-      b(p) = (v >>> 24).toByte; b(p + 1) = (v >>> 16).toByte
-      b(p + 2) = (v >>> 8).toByte; b(p + 3) = v.toByte
-      p += 4
-    }
-    @inline def putStr(s: String): Unit =
-      if (s == null) putInt(-1)
-      else {
-        val lenPos = p
-        p += 4
-        val n = writeUtf8(s, b, p)
-        p += n
-        val save = p; p = lenPos; putInt(n); p = save
-      }
-    b(p) = Version; p += 1
-    putInt(discovered.size)
-    discovered.foreach { d =>
-      putStr(d.url); putStr(d.court); putStr(d.query)
-      putInt(d.page); putInt(d.depth)
-      putInt((d.priority >>> 32).toInt); putInt(d.priority.toInt)
-      putStr(d.caseNumber); putStr(d.title); putStr(d.date)
-      putInt(d.rank)
-    }
-    doc match {
-      case Some(d) =>
-        b(p) = 1; p += 1
-        putStr(d.doc_id)
-        putInt(d.spans.size)
-        d.spans.foreach { s =>
-          putStr(s.kind); putStr(s.text); putStr(s.media_ref)
-          putInt(s.offset)
-        }
-      case None =>
-        b(p) = 0; p += 1
-    }
-    require(p == size, s"wire encode size mismatch: $p != $size")
-    b
-  }
-
-  /** UTF-8 byte length of `s` without materializing bytes. */
-  @inline private def utf8Len(s: String): Int = {
-    var n = 0
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      val c = s.charAt(i)
-      if (c < 0x80) n += 1
-      else if (c < 0x800) n += 2
-      else if (Character.isHighSurrogate(c) && i + 1 < len &&
-        Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
-      else if (Character.isSurrogate(c)) n += 1 // unpaired → '?' (JDK encoder)
-      else n += 3
-      i += 1
-    }
-    n
-  }
-
-  /** Write `s` as UTF-8 into `b` at `off`; returns bytes written. Matches
-    * `String.getBytes(UTF_8)` for well-formed input (unpaired surrogates
-    * become '?', as the JDK encoder does). */
-  private def writeUtf8(s: String, b: Array[Byte], off: Int): Int = {
-    var p = off
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      val c = s.charAt(i)
-      if (c < 0x80) { b(p) = c.toByte; p += 1 }
-      else if (c < 0x800) {
-        b(p) = (0xC0 | (c >> 6)).toByte
-        b(p + 1) = (0x80 | (c & 0x3F)).toByte
-        p += 2
-      } else if (Character.isHighSurrogate(c) && i + 1 < len &&
-        Character.isLowSurrogate(s.charAt(i + 1))) {
-        val cp = Character.toCodePoint(c, s.charAt(i + 1))
-        b(p) = (0xF0 | (cp >> 18)).toByte
-        b(p + 1) = (0x80 | ((cp >> 12) & 0x3F)).toByte
-        b(p + 2) = (0x80 | ((cp >> 6) & 0x3F)).toByte
-        b(p + 3) = (0x80 | (cp & 0x3F)).toByte
-        p += 4
-        i += 1
-      } else if (Character.isSurrogate(c)) {
-        b(p) = '?'.toByte; p += 1 // unpaired surrogate: JDK encoder behavior
-      } else {
-        b(p) = (0xE0 | (c >> 12)).toByte
-        b(p + 1) = (0x80 | ((c >> 6) & 0x3F)).toByte
-        b(p + 2) = (0x80 | (c & 0x3F)).toByte
-        p += 3
-      }
-      i += 1
-    }
-    p - off
-  }
-
   private[graft] def open(bytes: Array[Byte]): DataInputStream = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val v = in.readByte()
@@ -316,11 +197,6 @@ object Wire {
       i += 1
     }
     out.toSeq
-  }
-
-  @inline private[graft] def skipStr(in: DataInputStream): Unit = {
-    val n = in.readInt()
-    if (n > 0) in.skipBytes(n)
   }
 
   /** Byte position of the doc block (right after the discovery block), or -1
@@ -388,21 +264,23 @@ object Wire {
   def paragraphsArrayData(payload: Array[Byte],
       minSents: Int, minWords: Int): org.apache.spark.sql.catalyst.util.ArrayData = guarded("paragraphsArrayData", payload) {
     if (payload == null) return null
-    if (docBlockStart(payload) < 0) return null
+    val docAt = docBlockStart(payload)
+    if (docAt < 0) return null
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      paragraphsFoldStreaming(payload, minSents, minWords))
+      paragraphsFoldStreaming(payload, docAt, minSents, minWords))
   }
 
   /** The W1 fold + P7/P8 filter streamed off payload bytes: the surviving
     * paragraphs' rows. The fold's contract is reading (offset) order; at the
     * first offset that decreases it starts over on [[inOffsetOrder]]'s
     * sorted copy (never for Synth payloads, whose spans are generated in
-    * reading order). */
-  private def paragraphsFoldStreaming(payload: Array[Byte], minSents: Int,
+    * reading order). `docAt` is the payload's [[docBlockStart]], which the
+    * sorted copy shares (sorting moves span records only). */
+  private def paragraphsFoldStreaming(payload: Array[Byte], docAt: Int, minSents: Int,
       minWords: Int): Array[Any] = {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    var p = docBlockStart(payload)
+    var p = docAt
     val docIdLen = readIntAt(payload, p)
     p += 4 + math.max(0, docIdLen) // -1 = null doc_id: no bytes follow
     val nSpans = readIntAt(payload, p); p += 4
@@ -466,7 +344,7 @@ object Wire {
       p = p + 4 + math.max(mediaLen, 0)
       val offset = readIntAt(payload, p); p += 4
       if (offset < prevOffset) // out of reading order: fold the sorted copy
-        return paragraphsFoldStreaming(inOffsetOrder(payload), minSents, minWords)
+        return paragraphsFoldStreaming(inOffsetOrder(payload), docAt, minSents, minWords)
       prevOffset = offset
 
       val kind = kindOf(payload, kindStart, math.max(kindLen, 0))
@@ -781,19 +659,8 @@ object Wire {
     * are generated in reading order). */
   def docHashesStreaming(priority: Long, court: String, payload: Array[Byte]): graft.operators.Dedup.DocHashes = guarded("docHashesStreaming", payload) {
     if (payload == null) return null
-    var p = 0
-    require(payload(p) == Version, s"unknown wire version ${payload(0)}")
-    p += 1
-    var n = readIntAt(payload, p); p += 4
-    while (n > 0) { // skip the discovery block: 6 strings, 3 ints, 1 long
-      p = skipStrAt(payload, skipStrAt(payload, skipStrAt(payload, p)))
-      p += 16
-      p = skipStrAt(payload, skipStrAt(payload, skipStrAt(payload, p)))
-      p += 4
-      n -= 1
-    }
-    if (payload(p) == 0) return null
-    p += 1
+    var p = docBlockStart(payload)
+    if (p < 0) return null
     val docIdLen = readIntAt(payload, p)
     // -1 = null doc_id (putStr null contract, and every spansPayload):
     // a null DocHashes.doc_id, not a crash

@@ -142,7 +142,7 @@ object CrawlOracle {
       val roundDocs = Vector.newBuilder[(Long, String, Seq[Span])] // priority, doc_id, spans
 
       scheduled.result().foreach { case (e, salt, seq) =>
-        val out = Synth.fetch(synthCfg, e.url, e.retry)
+        val out = SynthOracle.fetch(synthCfg, e.url, e.retry)
         fetchLog += FetchLogRow(round, e.host, salt, seq, e.canonical, out.status, out.kind)
         if (out.status != "ok") {
           if (e.retry + 1 < cfg.maxRetries) retries += e.copy(retry = e.retry + 1)

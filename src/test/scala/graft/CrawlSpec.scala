@@ -36,7 +36,7 @@ class CrawlSpec extends AnyFunSuite {
     val docpages = rows.map { case (ct, q, p, r) =>
       val caseId = Synth.caseIdOf(c, ct, q, p, r)
       val junk = Rng.mix(c.seed, 0x1DL, Synth.rowIndex(c, ct, q, p, r))
-      Synth.docPageHref(c, ct, caseId, junk)
+      SynthOracle.docPageHref(c, ct, caseId, junk)
     }
     val pdfs = rows.map { case (ct, q, p, r) =>
       val caseId = Synth.caseIdOf(c, ct, q, p, r)
@@ -116,7 +116,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(docs.nonEmpty)
     docs.foreach { case (docId, spans) =>
       val fid = docId.split('/')(1).toLong
-      val expected = Synth.spansOf(synthCfg, Synth.contentIdOf(synthCfg, fid))
+      val expected = SynthOracle.spansOf(synthCfg, Synth.contentIdOf(synthCfg, fid))
       assert(spans === expected.toVector, s"span mismatch for $docId")
       // offsets dense + reading order
       assert(spans.map(_.offset) === spans.indices.toVector)

@@ -17,7 +17,7 @@ class HashingSpec extends AnyFunSuite {
 
   test("typed renderings equal Column renderings on synth docs") {
     val cfg = SynthConfig()
-    val docs = (0L until 30L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    val docs = (0L until 30L).map(i => Doc(s"d$i", SynthOracle.spansOf(cfg, i)))
     val byId = docs.toDS.toDF.select(
       $"doc_id",
       Segregate.renderPlain($"spans").as("p"),
@@ -58,8 +58,8 @@ class HashingSpec extends AnyFunSuite {
     * paragraph: the paragraph fold emits it before it meets the disorder,
     * so its rerun must discard what it emitted. */
   private def unsortedDocs(cfg: SynthConfig): Seq[Doc] = {
-    val reversed = Doc("u-rev", Synth.spansOf(cfg, 0L).reverse)
-    val swapped = (0L until 200L).iterator.map(Synth.spansOf(cfg, _)).collectFirst {
+    val reversed = Doc("u-rev", SynthOracle.spansOf(cfg, 0L).reverse)
+    val swapped = (0L until 200L).iterator.map(SynthOracle.spansOf(cfg, _)).collectFirst {
       case sp if sp.length >= 3 && PayloadOracle.segregateDoc("u", "plain", sp.dropRight(2))
           .exists(p => PayloadOracle.sentKeepRegex(p.content)) =>
         Doc("u-swap", sp.dropRight(2) ++ Seq(sp.last, sp(sp.length - 2)))
@@ -76,7 +76,7 @@ class HashingSpec extends AnyFunSuite {
 
   test("Wire.docHashesStreaming equals the oracle docHashes(decodeSpans) bit-for-bit") {
     val cfg = SynthConfig()
-    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i))) ++ unsortedDocs(cfg)
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", SynthOracle.spansOf(cfg, i))) ++ unsortedDocs(cfg)
     // adversarial shapes: unicode (2/3-byte UTF-8), supplementary-plane code
     // points (4-byte → surrogate pairs), unicode numerals/spaces in starter
     // position, null text, null media_ref, empty doc
@@ -89,7 +89,7 @@ class HashingSpec extends AnyFunSuite {
       Doc("w4", Seq.empty),
       Doc("w5", Seq(Span("heading", null, null, 0), Span("text", " 2 . dotted", null, 1))))
     (synthDocs ++ weird).foreach { d =>
-      val payload = Wire.encode(Nil, Some(d))
+      val payload = PayloadOracle.encode(Nil, Some(d))
       val streamed = Wire.docHashesStreaming(7L, "c", payload)
       val objects = PayloadOracle.docHashes(d.doc_id, 7L, "c", PayloadOracle.decodeSpans(payload))
       assert(streamed === objects, s"streaming hash mismatch for ${d.doc_id}")
@@ -102,7 +102,7 @@ class HashingSpec extends AnyFunSuite {
     // aliases the array), so every row read back as the LAST paragraph's
     // bytes once the fold moved on — counts matched, content was garbage.
     val cfg = SynthConfig()
-    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i))) ++ unsortedDocs(cfg)
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", SynthOracle.spansOf(cfg, i))) ++ unsortedDocs(cfg)
     val weird = Seq(
       Doc("w0", Seq(Span("text", "1. ü¶€ starter. Two. Three sentences here.", null, 0),
         Span("text", "continuation text", null, 1), Span("text", "2. next", null, 2))),
@@ -123,7 +123,7 @@ class HashingSpec extends AnyFunSuite {
       Doc("w8", Seq(Span("text", "5 . nbsp ref. One. Two. Three.", null, 0))),
       Doc("w9", Seq(Span("text", "𐄇. aegean ref. One. Two. Three.", null, 0))))
     (synthDocs ++ weird).foreach { d =>
-      val payload = Wire.encode(Nil, Some(d))
+      val payload = PayloadOracle.encode(Nil, Some(d))
       val arr = Wire.paragraphsArrayData(payload, 3, 30)
       assert(arr != null, s"null array for ${d.doc_id}")
       val streamed = (0 until arr.numElements()).map { k =>
@@ -143,22 +143,23 @@ class HashingSpec extends AnyFunSuite {
       Synth.Discovered("https://a.example.org/x?y=1", "c", "q", 2, 1, 99L, "CN/1", "Tü", "2022-01-01", 3),
       Synth.Discovered("https://b.example.org/", null, null, -1, 2, -1L, null, null, null, -1))
     val doc = Doc("D/1", Seq(Span("text", "body ünïcode 𐄇", null, 0), Span("image", null, "ref", 1)))
-    val p1 = Wire.encode(ds, Some(doc))
+    val p1 = PayloadOracle.encode(ds, Some(doc))
     assert(Wire.decodeDiscovered(p1) === ds)
     assert(PayloadOracle.decodeDoc(p1) === Some(doc))
-    val p2 = Wire.encode(ds, None)
+    val p2 = PayloadOracle.encode(ds, None)
     assert(Wire.decodeDiscovered(p2) === ds)
     assert(PayloadOracle.decodeDoc(p2) === None)
-    assert(Wire.encode(Nil, None) === null)
+    assert(PayloadOracle.encode(Nil, None) === null)
     assert(Wire.decodeDiscovered(null) === Nil)
     assert(PayloadOracle.decodeDoc(null) === None)
   }
 
   test("fetchEncoded equals fetch+encode on every URL kind, bit-for-bit") {
-    // The crawl hot loop streams pdf payloads byte-direct
-    // (Synth.writePdfPayload into a Wire.PayloadWriter); this pins it to the
-    // Span/String object path across pdf / listing / docpage / failure URLs,
-    // including a failRate config so the fail branch is exercised.
+    // The crawl streams every payload byte-direct (Synth.write*Payload into
+    // a Wire.PayloadWriter); this pins it to the Span/String object path
+    // (SynthOracle.fetch + PayloadOracle.encode) across pdf / listing /
+    // docpage / failure / out-of-range URLs, including a failRate config so
+    // the fail branch is exercised.
     for (cfg <- Seq(SynthConfig(), SynthConfig(failRate = 0.3, seed = 7L))) {
       val urls =
         (0L until 40L).map(fid => Synth.pdfUrl(cfg, (fid % cfg.courts).toInt, fid * 64 + (fid % cfg.courts))) ++
@@ -169,19 +170,37 @@ class HashingSpec extends AnyFunSuite {
           (1 to cfg.pagesPerQuery).map(page => Synth.listingUrl(c, q, page)))) ++
         // enough docpages to hit the 1/8 mirror-host branch of the pdf-url writer
         (0 until cfg.courts).flatMap(c => (0 until 12).map(rank =>
-          Synth.docPageHref(cfg, c, Synth.caseIdOf(cfg, c, 1, 2, rank), 5L))) ++
-        Seq("https://nowhere.example.org/unknown")
+          SynthOracle.docPageHref(cfg, c, Synth.caseIdOf(cfg, c, 1, 2, rank), 5L))) ++
+        // outside the universe: unparseable, a listing page past the last,
+        // a court past the last
+        Seq("https://nowhere.example.org/unknown",
+          Synth.listingUrl(0, 0, cfg.pagesPerQuery + 1), Synth.listingUrl(cfg.courts, 0, 1))
       for (url <- urls; attempt <- Seq(0, 1, 2)) {
-        val out = Synth.fetch(cfg, url, attempt)
+        val out = SynthOracle.fetch(cfg, url, attempt)
         val enc = Synth.fetchEncoded(cfg, url, attempt)
         assert(enc.status === out.status, url)
         assert(enc.kind === out.kind, url)
         assert(enc.docId === out.doc.map(_.doc_id).orNull, url)
         assert(enc.bytes === out.bytes, url)
         assert(enc.latencyMicros === out.latencyMicros, url)
-        val expected = Wire.encode(out.discovered, out.doc)
+        val expected = PayloadOracle.encode(out.discovered, out.doc)
         assert(java.util.Arrays.equals(enc.payload, expected), s"payload bytes differ for $url attempt $attempt")
       }
+    }
+  }
+
+  test("SparkEntry.synthDocs rows equal the oracle's spansOf docs, in the docs table's spans type") {
+    // the query surface's synthetic docs are wireSpans of Synth.pdfPayload;
+    // compared as CrawlSpec compares the crawl's docs table
+    val cfg = SynthConfig()
+    val df = SparkEntry.synthDocs(spark)
+    assert(df.schema("spans").dataType === org.apache.spark.sql.types.ArrayType(
+      graft.functions.WireExpressions.SpanSchema, containsNull = false)) // wireSpans' type
+    val docs = df.as[Doc].collect().map(d => d.doc_id -> d.spans.toVector).toMap
+    assert(docs.keySet === (0 until 200).map(i => s"SYN/$i").toSet)
+    docs.foreach { case (docId, spans) =>
+      val expected = SynthOracle.spansOf(cfg, docId.stripPrefix("SYN/").toLong)
+      assert(spans === expected, s"span mismatch for $docId")
     }
   }
 
@@ -195,7 +214,7 @@ class HashingSpec extends AnyFunSuite {
     // diverge engine and oracle (ADVICE r3).
     val cfg = SynthConfig()
     (0L until 200L).foreach { i =>
-      Synth.spansOf(cfg, i).foreach { sp =>
+      SynthOracle.spansOf(cfg, i).foreach { sp =>
         Seq(sp.text, sp.media_ref).filter(_ != null).foreach { s =>
           assert(s.codePoints().allMatch(cp => cp <= 0xFFFF),
             s"supplementary-plane char in synth doc $i: '$s'")
@@ -218,20 +237,20 @@ class HashingSpec extends AnyFunSuite {
   test("docHashes is deterministic and discriminates content") {
     val cfg = SynthConfig()
     def docHashes(id: String, spans: Seq[Span]) =
-      Wire.docHashesStreaming(1L, "c", Wire.encode(Nil, Some(Doc(id, spans))))
-    val a = docHashes("x", Synth.spansOf(cfg, 1L))
-    val a2 = docHashes("x", Synth.spansOf(cfg, 1L))
-    val b = docHashes("x", Synth.spansOf(cfg, 2L))
+      Wire.docHashesStreaming(1L, "c", PayloadOracle.encode(Nil, Some(Doc(id, spans))))
+    val a = docHashes("x", SynthOracle.spansOf(cfg, 1L))
+    val a2 = docHashes("x", SynthOracle.spansOf(cfg, 1L))
+    val b = docHashes("x", SynthOracle.spansOf(cfg, 2L))
     assert(a === a2)
     assert(a.content_hash !== b.content_hash)
     // D3 plant: two contents sharing a baseId collide under nodigits only
-    val contentA = Synth.spansOf(cfg, 10L)
+    val contentA = SynthOracle.spansOf(cfg, 10L)
     val base = Synth.baseIdOf(cfg, 10L)
     val partner = (0L until cfg.contentSpace).find(c2 =>
       c2 != 10L && Synth.baseIdOf(cfg, c2) == base)
     partner.foreach { c2 =>
       val hA = docHashes("a", contentA)
-      val hB = docHashes("b", Synth.spansOf(cfg, c2))
+      val hB = docHashes("b", SynthOracle.spansOf(cfg, c2))
       assert(hA.render_hash_nodigits === hB.render_hash_nodigits)
       assert(hA.content_hash !== hB.content_hash)
     }
@@ -261,15 +280,15 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("inOffsetOrder: the payload itself when sorted, a stable offset sort otherwise") {
-    val sorted = Wire.encode(Nil, Some(Doc("s", Seq(Span("text", "a", null, 0),
+    val sorted = PayloadOracle.encode(Nil, Some(Doc("s", Seq(Span("text", "a", null, 0),
       Span("text", "b", null, 0), Span("image", null, "m", 1)))))
     assert(Wire.inOffsetOrder(sorted) eq sorted)
-    val docless = Wire.encode(Seq(Synth.Discovered("u", "c", "q", 1, 0, 1L, null, null, null, 0)), None)
+    val docless = PayloadOracle.encode(Seq(Synth.Discovered("u", "c", "q", 1, 0, 1L, null, null, null, 0)), None)
     assert(Wire.inOffsetOrder(docless) eq docless)
     val spans = Seq(Span("text", "c", null, 2), Span("text", "a1", null, 0),
       Span(null, null, null, 1), Span("text", "a2", null, 0))
-    val unsorted = Wire.encode(Nil, Some(Doc(null, spans)))
+    val unsorted = PayloadOracle.encode(Nil, Some(Doc(null, spans)))
     assert(java.util.Arrays.equals(Wire.inOffsetOrder(unsorted),
-      Wire.encode(Nil, Some(Doc(null, spans.sortBy(_.offset))))))
+      PayloadOracle.encode(Nil, Some(Doc(null, spans.sortBy(_.offset))))))
   }
 }

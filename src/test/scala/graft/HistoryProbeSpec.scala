@@ -26,7 +26,7 @@ class HistoryProbeSpec extends AnyFunSuite {
   private def compactedHistory(table: String, rounds: Seq[DataFrame]): DataFrame = {
     val dir = Files.createTempDirectory(s"graft-history-$table").toString
     rounds.zipWithIndex.foreach { case (df, i) =>
-      Snapshots.commit(dir, i + 1, Map(table -> df), Map.empty)
+      SnapshotsSpec.commit(dir, i + 1, Map(table -> df), Map.empty)
     }
     Snapshots.compact(spark, dir, table, 2)
     assert(Snapshots.currentSegments(dir, table).size === 1)
@@ -98,7 +98,7 @@ class HistoryProbeSpec extends AnyFunSuite {
     // a frame carrying only spans has no docs identity: recomputing another
     // one could never match the docs history, so it is an error
     val cfg = graft.sources.SynthConfig()
-    val spansOnly = (0L until 5L).map(i => (s"S/$i", i, graft.sources.Synth.spansOf(cfg, i)))
+    val spansOnly = (0L until 5L).map(i => (s"S/$i", i, SynthOracle.spansOf(cfg, i)))
       .toDF("doc_id", "priority", "spans")
       .withColumn("render_hash_plain", lit("p"))
     val e = intercept[IllegalArgumentException](

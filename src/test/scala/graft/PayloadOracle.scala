@@ -1,23 +1,63 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.model.{Doc, Paragraph, Span}
 import graft.operators.{Dedup, Segregate}
-import graft.sources.Wire
+import graft.sources.{Synth, Wire}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The typed object path over payloads, spans and paragraphs: the oracle
-  * for the streaming kernels (`Wire.docHashesStreaming`,
+  * for the payload writers (`Wire.PayloadWriter` as the Synth fetch drives
+  * it) and the streaming kernels (`Wire.docHashesStreaming`,
   * `Wire.paragraphsArrayData`, `Segregate.sentKeepBytes`). Each function
   * decodes to `Span`/`Doc` objects and Strings and computes the result the
   * way the reference states it; the kernels must agree with it bit for bit
   * (HashingSpec, SegregateSpec, WireSpec, CrawlOracle). */
 object PayloadOracle {
 
-  // ---------- payload decode ----------
+  // ---------- payload encode / decode ----------
+
+  /** Encode (discoveries, doc) → the wire layout, plainly: big-endian ints
+    * and length-prefixed `String.getBytes(UTF_8)` strings (`-1` = null).
+    * Null when both are empty, so the parquet column stores a NULL. */
+  def encode(discovered: Seq[Synth.Discovered], doc: Option[Doc]): Array[Byte] = {
+    if (discovered.isEmpty && doc.isEmpty) return null
+    val bytes = new ByteArrayOutputStream
+    val out = new DataOutputStream(bytes)
+    def putStr(s: String): Unit =
+      if (s == null) out.writeInt(-1)
+      else { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+    out.writeByte(1) // wire version
+    out.writeInt(discovered.size)
+    discovered.foreach { d =>
+      putStr(d.url); putStr(d.court); putStr(d.query)
+      out.writeInt(d.page); out.writeInt(d.depth); out.writeLong(d.priority)
+      putStr(d.caseNumber); putStr(d.title); putStr(d.date)
+      out.writeInt(d.rank)
+    }
+    out.writeBoolean(doc.isDefined)
+    doc.foreach { d =>
+      putStr(d.doc_id)
+      out.writeInt(d.spans.size)
+      d.spans.foreach { s =>
+        putStr(s.kind); putStr(s.text); putStr(s.media_ref)
+        out.writeInt(s.offset)
+      }
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  private def skipStr(in: DataInputStream): Unit = {
+    val n = in.readInt()
+    if (n > 0) in.skipBytes(n)
+  }
 
   /** Decode only the doc (skips over the discovery block). */
   def decodeDoc(bytes: Array[Byte]): Option[Doc] = Wire.guarded("decodeDoc", bytes) {
@@ -26,10 +66,10 @@ object PayloadOracle {
     var n = in.readInt()
     while (n > 0) { // skip discoveries: 6 strings, 3 ints, 1 long each
       var s = 0
-      while (s < 3) { Wire.skipStr(in); s += 1 }
+      while (s < 3) { skipStr(in); s += 1 }
       in.skipBytes(16) // page, depth, priority
       s = 0
-      while (s < 3) { Wire.skipStr(in); s += 1 }
+      while (s < 3) { skipStr(in); s += 1 }
       in.skipBytes(4) // rank
       n -= 1
     }

@@ -24,7 +24,7 @@ class SegregateSpec extends AnyFunSuite {
 
   /** The production W1 fold (the streaming kernel, unfiltered) on spans. */
   private def fold(docId: String, spans: Seq[Span]): Seq[Paragraph] = {
-    val arr = Wire.paragraphsArrayData(Wire.encode(Nil, Some(Doc(docId, spans))), 0, 0)
+    val arr = Wire.paragraphsArrayData(PayloadOracle.encode(Nil, Some(Doc(docId, spans))), 0, 0)
     (0 until arr.numElements()).map { k =>
       val r = arr.getStruct(k, 4)
       Paragraph(docId, "plain", r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
@@ -207,9 +207,9 @@ class SegregateSpec extends AnyFunSuite {
     assert(rel === typed)
 
     // and on the synthetic corpus at small scale
-    import graft.sources.{Synth, SynthConfig}
+    import graft.sources.SynthConfig
     val cfg = SynthConfig()
-    val docs = (0L until 20L).map(c => Doc(s"d$c", Synth.spansOf(cfg, c)))
+    val docs = (0L until 20L).map(c => Doc(s"d$c", SynthOracle.spansOf(cfg, c)))
     val rel2 = Segregate.paragraphsRelational(docs.toDS.toDF).collect()
       .map(r => (r.getString(0), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5))).toSet
     val typed2 = docs.flatMap(d => PayloadOracle.segregateDoc(d.doc_id, "plain", d.spans))
@@ -218,9 +218,9 @@ class SegregateSpec extends AnyFunSuite {
   }
 
   test("typed flatMap and relational window variant agree on paragraphs") {
-    import graft.sources.{Synth, SynthConfig}
+    import graft.sources.SynthConfig
     val cfg = SynthConfig()
-    val docs = (0L until 20L).map(c => Doc(s"d$c", Synth.spansOf(cfg, c)))
+    val docs = (0L until 20L).map(c => Doc(s"d$c", SynthOracle.spansOf(cfg, c)))
     val typed = PayloadOracle.paragraphs(docs.toDS).collect()
       .map(p => (p.doc_id, p.paragraph_number, p.content, p.reference, p.page)).toSet
 
@@ -276,7 +276,7 @@ class SegregateSpec extends AnyFunSuite {
     // pins the generator contract the oracles rely on.
     val cfg = graft.sources.SynthConfig()
     val texts =
-      (0L until 500L).flatMap(i => graft.sources.Synth.spansOf(cfg, i))
+      (0L until 500L).flatMap(i => SynthOracle.spansOf(cfg, i))
         .flatMap(s => Option(s.text)) ++
       graft.sources.Synth.scJudgments(cfg, 300).flatMap(j =>
         Seq(j.diary_number, j.case_number, j.by, j.petitioner.name,

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.Snapshots
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class SnapshotsSpec extends AnyFunSuite {
@@ -12,7 +13,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("commit → latestRound; uncommitted rounds are invisible") {
     val dir = Files.createTempDirectory("snap").toString
     assert(Snapshots.latestRound(dir) === None)
-    Snapshots.commit(dir, 1, Map("t" -> Seq(1, 2, 3).toDF("x")), Map.empty)
+    SnapshotsSpec.commit(dir, 1, Map("t" -> Seq(1, 2, 3).toDF("x")), Map.empty)
     assert(Snapshots.latestRound(dir) === Some(1))
     // simulate a crash mid-round-2: table written, manifest missing
     Seq(4, 5).toDF("x").write.parquet(Snapshots.tablePath(dir, 2, "t"))
@@ -23,8 +24,8 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("readDeltas unions committed deltas; readLatest picks newest full table") {
     val dir = Files.createTempDirectory("snap2").toString
-    Snapshots.commit(dir, 1, Map("delta" -> Seq(1).toDF("x"), "full" -> Seq(10).toDF("y")), Map.empty)
-    Snapshots.commit(dir, 2, Map("delta" -> Seq(2, 3).toDF("x"), "full" -> Seq(20, 30).toDF("y")), Map.empty)
+    SnapshotsSpec.commit(dir, 1, Map("delta" -> Seq(1).toDF("x"), "full" -> Seq(10).toDF("y")), Map.empty)
+    SnapshotsSpec.commit(dir, 2, Map("delta" -> Seq(2, 3).toDF("x"), "full" -> Seq(20, 30).toDF("y")), Map.empty)
     // readDeltas adds the `round` partition column — select the data column
     val deltas = Snapshots.readDeltas(spark, dir, "delta").get
     assert(deltas.columns.toSet === Set("x", "round"), "round column exposed by partition inference")
@@ -35,7 +36,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("compact tiers deltas into segments; readDeltas round-trips exactly") {
     val dir = Files.createTempDirectory("snap4").toString
     (1 to 6).foreach { r =>
-      Snapshots.commit(dir, r, Map("delta" -> Seq(r * 10, r * 10 + 1).toDF("x")), Map.empty)
+      SnapshotsSpec.commit(dir, r, Map("delta" -> Seq(r * 10, r * 10 + 1).toDF("x")), Map.empty)
     }
     val before = Snapshots.readDeltas(spark, dir, "delta").get
       .select("x", "round").as[(Int, Int)].collect().sorted.toSeq
@@ -63,7 +64,7 @@ class SnapshotsSpec extends AnyFunSuite {
       s"expected few segment files, saw ${Snapshots.scanFileCount(dir, "delta")}")
 
     // later rounds append past the segments and stay visible
-    Snapshots.commit(dir, 7, Map("delta" -> Seq(70).toDF("x")), Map.empty)
+    SnapshotsSpec.commit(dir, 7, Map("delta" -> Seq(70).toDF("x")), Map.empty)
     val withTail = Snapshots.readDeltas(spark, dir, "delta").get
       .select("x", "round").as[(Int, Int)].collect().sorted.toSeq
     assert(withTail === (before :+ ((70, 7))).sorted)
@@ -77,7 +78,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("snap5").toString
     val rounds = Snapshots.MaxSegments + 1 // one compaction per round → overflow
     (1 to rounds).foreach { r =>
-      Snapshots.commit(dir, r, Map("d" -> Seq(r).toDF("x")), Map.empty)
+      SnapshotsSpec.commit(dir, r, Map("d" -> Seq(r).toDF("x")), Map.empty)
       Snapshots.compact(spark, dir, "d", r)
     }
     // the (MaxSegments+1)-th compaction collapsed everything into seg=1-N
@@ -92,7 +93,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("compact after a crash mid-compaction: reads unchanged, orphans GC'd") {
     val dir = Files.createTempDirectory("snap6").toString
     (1 to 6).foreach { r =>
-      Snapshots.commit(dir, r, Map("d" -> Seq(r).toDF("x")), Map.empty)
+      SnapshotsSpec.commit(dir, r, Map("d" -> Seq(r).toDF("x")), Map.empty)
     }
     Snapshots.compact(spark, dir, "d", 4)
     val before = Snapshots.readDeltas(spark, dir, "d").get
@@ -122,11 +123,28 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("manifest records table counts and lineage fields as json") {
     val dir = Files.createTempDirectory("snap3").toString
-    Snapshots.commit(dir, 7, Map("t" -> Seq(1, 2).toDF("x")),
+    SnapshotsSpec.commit(dir, 7, Map("t" -> Seq(1, 2).toDF("x")),
       Map("report" -> """{"ok": 2}"""))
     val json = Files.readString(Snapshots.manifestPath(dir, 7))
     assert(json.contains(""""round": 7"""))
     assert(json.contains(""""t": 2"""))
     assert(json.contains(""""report": {"ok": 2}"""))
+  }
+}
+
+object SnapshotsSpec {
+  /** Write the round's tables, then commit them with one manifest — the
+    * `Snapshots.writeTable` + `Snapshots.commitManifest` pair the crawl
+    * runs. Table counts come from parquet footers. Returns the counts. */
+  def commit(
+      dir: String,
+      round: Int,
+      tables: Map[String, DataFrame],
+      lineage: Map[String, String]): Map[String, Long] = {
+    val counts = tables.map { case (name, df) =>
+      name -> Snapshots.writeTable(dir, round, name, df)
+    }
+    Snapshots.commitManifest(dir, round, counts, lineage)
+    counts
   }
 }

@@ -26,7 +26,7 @@ class WireSpec extends AnyFunSuite {
         Span("text", "1. The petitioner submits. This is a sentence. And one more here to pass filters.", null, 1),
         Span("image", null, "media/9/img0.png", 2),
         Span("text", "Further text with enough words to matter for the paragraph fold over spans.", null, 3))))
-    Wire.encode(disc, doc)
+    PayloadOracle.encode(disc, doc)
   }
 
   private val decoders: Seq[(String, Array[Byte] => Any)] = Seq(
