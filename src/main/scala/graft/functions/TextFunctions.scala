@@ -50,14 +50,6 @@ object TextFunctions {
       .otherwise(rpad(text, width, " "))
   }
 
-  /** Word k-shingles of the token array: positions 1..n-k+1, space-joined. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) < k, array())
-      .otherwise(transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
-  }
-
   /** MinHash signature (Broder 1997): for each of `numHashes` seeded hash
     * functions, the min over shingle hashes. One single-pass kernel per row
     * ([[SketchKernels.minhashSignature]] — tokenizes ONCE, constant work per

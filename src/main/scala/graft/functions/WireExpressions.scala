@@ -43,9 +43,10 @@ object WireExpressions {
     StructField("content", StringType, nullable = false),
     StructField("reference", StringType)))
 
-  /** Field order mirrors the tail of the `FetchEvent` row (after entry,
-    * salt, fetchSeq) so [[graft.operators.Politeness.fetchAll]]'s flattened
-    * output keeps the exact schema the typed encoder used to produce. */
+  /** The fetch result fields, in the order
+    * [[graft.operators.Politeness.fetchAll]]'s flattened projection emits
+    * them after (entry, salt, fetchSeq) — the fetch rows the fetch_log write
+    * and the discovery/doc consumers read. */
   val FetchSchema: StructType = StructType(Seq(
     StructField("status", StringType, nullable = false),
     StructField("kind", StringType, nullable = false),

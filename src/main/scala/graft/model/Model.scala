@@ -10,8 +10,6 @@ package graft.model
   *  - [[FrontierEntry]]: per-URL crawl state, synthesized from the reference's
   *    `search_params` loop state (`src/pipeline/search_and_scrape.py:165,246-253`)
   *    and per-URL download state (`src/retrievers/base.py:34-46`).
-  *  - [[Paragraph]]: the segregated paragraph unit
-  *    (`src/segregators/adobe_json.py:48-54`).
   */
 final case class Span(
     kind: String,      // 'text' | 'heading' | 'table' | 'image'
@@ -55,28 +53,6 @@ final case class ScJudgment(
     petitioner: Party,
     respondent: Party,
     document_href: String)
-
-/** Judgment metadata row parsed from a listing page
-  * (`src/retrievers/delhi_high_court.py:55-60`). */
-final case class Judgment(
-    court: String,
-    query: String,
-    page: Int,
-    rank: Int, // row order within the page
-    case_number: String,
-    title: String,
-    date: String,
-    document_href: String
-)
-
-final case class Paragraph(
-    doc_id: String,
-    extractor: String,
-    page: Int,
-    paragraph_number: Int,
-    content: String,
-    reference: String // starter numeral, spaces removed, e.g. "1.2."; null if none
-)
 
 /** One robots.txt disallow rule: URLs on `host` whose path starts with
   * `path_prefix` must not be fetched (north rule: robots gates enforced in

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
 
 /** Cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
   * CoNEXT 2014 — public algorithm). Partial-key cuckoo hashing with 4-slot
@@ -96,7 +96,9 @@ final class CuckooFilter private (
     false
   }
 
-  def serialize(out: DataOutputStream): Unit = {
+  /** Write the filter to `os`, which stays open (like `BloomFilter.writeTo`). */
+  def serialize(os: OutputStream): Unit = {
+    val out = new DataOutputStream(os)
     out.writeInt(Magic)
     out.writeInt(numBuckets)
     out.writeLong(count)
@@ -125,7 +127,8 @@ object CuckooFilter {
     new CuckooFilter(buckets, new Array[Short](buckets * SlotsPerBucket), 0L)
   }
 
-  def deserialize(in: DataInputStream): CuckooFilter = {
+  def deserialize(is: InputStream): CuckooFilter = {
+    val in = new DataInputStream(is)
     require(in.readInt() == Magic, "bad cuckoo filter header")
     val buckets = in.readInt()
     val count = in.readLong()

@@ -1,7 +1,5 @@
 package graft.operators
 
-import graft.model.Doc
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 

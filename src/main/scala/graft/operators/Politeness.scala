@@ -61,26 +61,6 @@ object SchedCounters {
   }
 }
 
-/** Result of one simulated fetch. The discoveries and (for PDFs) the doc do
-  * NOT ride the typed encoder as nested objects: round 2 measured the
-  * generated serializer for the nested shape at HotSpot's huge-method JIT
-  * threshold and its per-row object-graph encode as the dominant 32-thread
-  * allocation source (VERDICT r2 Performance #1). They are pre-serialized
-  * into ONE opaque binary `payload` ([[graft.sources.Wire]]); the encoder
-  * for this flat row is small, JIT-friendly, and the payload write is a
-  * memcpy. `doc_id` is surfaced as a scalar column so the dedup-survivor
-  * join never has to crack the payload. */
-final case class FetchEvent(
-    entry: FrontierEntry,
-    salt: Int,
-    fetchSeq: Int,
-    status: String, // ok | fail
-    kind: String,   // listing | docpage | pdf | unknown
-    bytes: Long,
-    latencyMicros: Long,
-    doc_id: String,        // null unless kind=pdf
-    payload: Array[Byte])  // Wire-encoded (discoveries, doc); null when both empty
-
 /** Per-host politeness with explicit skew handling (north rule; the scaled
   * analog of the reference's sequential per-site paging + its 25 req/min API
   * budget, `/root/reference/AdobePDFExtractAPI.md:37`).
@@ -280,7 +260,7 @@ object Politeness {
     * ORDER is unaffected: spacing only stretches latency_micros. */
   /** The fetch wave as RELATIONAL ops (fetch-as-expression, round 4). The
     * old chain — typed `.filter(_.scheduled)` → `mapPartitions` building
-    * `FetchEvent` objects — decoded the 13-field entry struct twice per row
+    * typed fetch-event objects — decoded the 13-field entry struct twice per row
     * and re-encoded its eight strings once more; that row↔object churn was
     * ~11% of 32-thread execution samples (JFR). Now the only per-row object
     * work is the url String the generator parses: a Column filter and ONE
@@ -290,7 +270,7 @@ object Politeness {
     * inside, bit-equal to the src/test oracle `SynthOracle.fetch` +
     * `PayloadOracle.encode` per HashingSpec) producing the
     * (status, kind, bytes, latencyMicros, doc_id, payload) struct, flattened
-    * to the exact schema the typed encoder used to emit. The flatten stays a
+    * into the (entry, salt, fetchSeq, status, …, payload) fetch projection. The flatten stays a
     * SEPARATE projection: CollapseProject keeps multi-referenced non-cheap
     * expressions un-inlined, and PolitenessSpec pins fetch-exactly-once per
     * scheduled row via the `Synth.fetchRow` counter. */

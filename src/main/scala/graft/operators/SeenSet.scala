@@ -1,9 +1,11 @@
 package graft.operators
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.{BufferedInputStream, InputStream}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.Snapshots
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -53,96 +55,52 @@ object SeenSet {
   val BloomShardExpectedItems: Long = 1L << 20
   val BloomFpp: Double = 0.01
 
+  /** Smallest capacity a cuckoo bucket is created at, by a rebuild and by an
+    * incremental update alike: a rebuild sized below it would saturate on the
+    * next rounds' keys and send its whole key range to the exact join until
+    * the next rebuild. */
+  private val MinBucketCapacity: Long = 1L << 16
+
   private def bucketFile(dir: String, b: Int): Path = Paths.get(dir, f"bucket-$b%05d.cuckoo")
   private def saturatedMarker(dir: String, b: Int): Path =
     Paths.get(dir, f"bucket-$b%05d.saturated")
   private def bloomFile(dir: String, b: Int): Path = Paths.get(dir, f"seen-$b%05d.bloom")
 
-  /** Build/refresh all per-bucket cuckoo filters and the bloom from the exact
-    * seen table. Deterministic layout: bucket = pmod(url_hash, buckets); hash
-    * repartitioning sends every row of a bucket to one task, so each bucket
-    * file has exactly one writer. */
-  def rebuildFilters(seen: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
+  /** The bucket (and bloom shard) of a url hash; agrees with the routing
+    * `pmod(url_hash, buckets)`, so a probe reads the files its key was
+    * written to. */
+  private[graft] def bucketOf(h: Long, buckets: Int): Int = Math.floorMod(h, buckets)
+
+  /** The one pass every filter file is written through: repartitioning by
+    * `pmod(url_hash, buckets)` sends all keys of a bucket to one task, so each
+    * bucket file has one writer, and `f` runs once per bucket with its keys
+    * (so its file stats run once per bucket — on S3/HDFS each is an RPC). */
+  private def forEachBucket(keys: DataFrame, dir: String, buckets: Int)(
+      f: (Int, Array[Long]) => Unit): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val spark = seen.sparkSession
+    val spark = keys.sparkSession
     import spark.implicits._
-    val total = seen.count()
-    // 3× headroom over the average per-bucket load absorbs hash-modulo skew
-    val perBucket = math.max(64L, total / buckets * 3)
-    seen.select(col("url_hash").cast("long"))
+    keys.select(col("url_hash").cast("long"))
       .repartition(buckets, pmod(col("url_hash"), lit(buckets)))
       .as[Long]
       .foreachPartition { (it: Iterator[Long]) =>
-        // buffer the slice so the filter can be sized from the EXACT count
-        // (and resized from the buffer if skew still saturates it)
-        val byBucket = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-        it.foreach { h =>
-          val b = (((h % buckets) + buckets) % buckets).toInt
-          byBucket.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty[Long]) += h
-        }
-        byBucket.foreach { case (b, keys) =>
-          val f = buildFilter(keys, math.max(perBucket, keys.length.toLong))
-          atomicWrite(bucketFile(dir, b), f)
-          Files.deleteIfExists(saturatedMarker(dir, b))
-          // shard bloom rebuilt in the SAME single-writer pass (fixed shape)
-          val bloom = BloomFilter.create(BloomShardExpectedItems, BloomFpp)
-          keys.foreach(bloom.putLong)
-          writeBloom(dir, b, bloom)
-        }
+        it.toArray.groupBy(bucketOf(_, buckets)).foreach { case (b, ks) => f(b, ks) }
       }
   }
 
-  private def writeBloom(dir: String, b: Int, bloom: BloomFilter): Unit = {
-    val tmp = Files.createTempFile(Paths.get(dir), "bloom", ".tmp")
-    val out = new BufferedOutputStream(Files.newOutputStream(tmp))
-    try bloom.writeTo(out) finally out.close()
-    Files.move(tmp, bloomFile(dir, b), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+  /** Insert `keys` into bloom shard `b` — loaded from its file unless `fresh`,
+    * so a rebuild drops what the shard held — and replace the file. Keys go
+    * straight into the loaded shard (no delta-bloom build, no driver-side
+    * merge of fat bitmaps — the round-3 `stat.bloomFilter` path shipped full
+    * ~5 MB partials to the driver every round). */
+  private def putBloom(dir: String, b: Int, keys: Array[Long], fresh: Boolean): Unit = {
+    val bloom = (if (fresh) None else loadBloom(dir, b))
+      .getOrElse(BloomFilter.create(BloomShardExpectedItems, BloomFpp))
+    keys.foreach(bloom.putLong)
+    Snapshots.replaceFile(bloomFile(dir, b))(bloom.writeTo)
   }
 
-  /** Fold a round's newly-seen keys into the stored bloom shards. MANDATORY
-    * after every seen-table append: a bloom-negative row is classified
-    * *definitely novel* and bypasses the cuckoo/exact path, so a stale bloom
-    * would cause re-fetches. Same single-writer-per-shard repartition
-    * discipline as the cuckoo update; keys are inserted straight into the
-    * loaded shard (no delta-bloom build, no driver-side merge of fat
-    * bitmaps — the round-3 `stat.bloomFilter` path shipped full ~5 MB
-    * partials to the driver every round). */
-  def addToBloom(newKeys: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val spark = newKeys.sparkSession
-    import spark.implicits._
-    newKeys.select(col("url_hash").cast("long"))
-      .repartition(buckets, pmod(col("url_hash"), lit(buckets)))
-      .as[Long]
-      .foreachPartition { (it: Iterator[Long]) =>
-        val byShard = scala.collection.mutable.Map.empty[Int, BloomFilter]
-        it.foreach { h =>
-          val b = (((h % buckets) + buckets) % buckets).toInt
-          byShard.getOrElseUpdate(b,
-            loadBloom(dir, b).getOrElse(BloomFilter.create(BloomShardExpectedItems, BloomFpp)))
-            .putLong(h)
-        }
-        byShard.foreach { case (b, f) => writeBloom(dir, b, f) }
-      }
-  }
-
-  /** Build a filter over `keys` sized for at least `minCapacity`, retrying at
-    * double capacity if partial-key eviction fails early (cuckoo inserts can
-    * fail below nominal load under adversarial fingerprint collisions). */
-  private def buildFilter(keys: scala.collection.Seq[Long], minCapacity: Long): CuckooFilter = {
-    var cap = minCapacity
-    while (true) {
-      val f = CuckooFilter.create(cap)
-      if (keys.forall(f.add)) return f
-      cap *= 2
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Add newly-seen hashes into the bucket filters (read-modify-write per
-    * bucket; single writer per bucket by the same repartition argument).
-    * Callers must ALSO call [[addToBloom]] with the same keys — see its doc.
+  /** Insert `keys` into cuckoo bucket `b` (read-modify-write).
     *
     * Saturation is NOT fatal: a cuckoo filter cannot grow in place (only
     * fingerprints are stored, not keys), so a bucket that fills up is marked
@@ -151,67 +109,68 @@ object SeenSet {
     * extra join probe for that key range) until the next [[rebuildFilters]]
     * re-sizes it from the exact table (the documented recovery path, and what
     * resume does on startup). */
-  def addToFilters(newKeys: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
-    val spark = newKeys.sparkSession
-    import spark.implicits._
-    val perBucket = 1 << 16
-    newKeys.select(col("url_hash").cast("long"))
-      .repartition(buckets, pmod(col("url_hash"), lit(buckets)))
-      .as[Long]
-      .foreachPartition { (it: Iterator[Long]) =>
-        val byBucket = scala.collection.mutable.Map.empty[Int, CuckooFilter]
-        val saturated = scala.collection.mutable.Set.empty[Int]
-        // ONE saturation-marker stat per bucket, memoized — a per-key
-        // Files.exists would be one filesystem (metadata RPC, on S3/HDFS)
-        // call per URL hash per round, dominating the whole update
-        val knownSaturated = scala.collection.mutable.Map.empty[Int, Boolean]
-        it.foreach { h =>
-          val b = (((h % buckets) + buckets) % buckets).toInt
-          if (!saturated.contains(b) &&
-              !knownSaturated.getOrElseUpdate(b, Files.exists(saturatedMarker(dir, b)))) {
-            val f = byBucket.getOrElseUpdate(b,
-              loadBucket(dir, b).getOrElse(CuckooFilter.create(perBucket)))
-            if (!f.add(h)) {
-              saturated += b
-              byBucket.remove(b)
-            }
-          }
-        }
-        byBucket.foreach { case (b, f) => atomicWrite(bucketFile(dir, b), f) }
-        saturated.foreach { b =>
-          Files.deleteIfExists(bucketFile(dir, b))
-          Files.createDirectories(saturatedMarker(dir, b).getParent)
-          if (!Files.exists(saturatedMarker(dir, b)))
-            Files.createFile(saturatedMarker(dir, b))
-        }
+  private def putCuckoo(dir: String, b: Int, keys: Array[Long]): Unit =
+    if (!Files.exists(saturatedMarker(dir, b))) {
+      val f = loadBucket(dir, b).getOrElse(CuckooFilter.create(MinBucketCapacity))
+      if (keys.forall(f.add)) Snapshots.replaceFile(bucketFile(dir, b))(f.serialize)
+      else {
+        Files.deleteIfExists(bucketFile(dir, b))
+        Files.write(saturatedMarker(dir, b), Array.emptyByteArray)
       }
-  }
+    }
 
-  private def atomicWrite(p: Path, f: CuckooFilter): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
-    try f.serialize(out) finally out.close()
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def loadBucket(dir: String, b: Int): Option[CuckooFilter] = {
-    val p = bucketFile(dir, b)
-    if (!Files.exists(p)) None
-    else {
-      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
-      try Some(CuckooFilter.deserialize(in)) finally in.close()
+  /** Rebuild the cuckoo buckets (sized from each slice's EXACT count, markers
+    * cleared) and the bloom shards from the exact seen table. */
+  def rebuildFilters(seen: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
+    // 3× headroom over the average per-bucket load absorbs hash-modulo skew
+    val perBucket = math.max(MinBucketCapacity, seen.count() / buckets * 3)
+    forEachBucket(seen, dir, buckets) { (b, keys) =>
+      val f = buildFilter(keys, math.max(perBucket, keys.length.toLong))
+      Snapshots.replaceFile(bucketFile(dir, b))(f.serialize)
+      Files.deleteIfExists(saturatedMarker(dir, b))
+      putBloom(dir, b, keys, fresh = true)
     }
   }
 
-  def loadBloom(dir: String, b: Int): Option[BloomFilter] = {
-    val p = bloomFile(dir, b)
+  /** Fold a round's newly-seen keys into both tiers: the cuckoo buckets
+    * ([[putCuckoo]]) and the bloom shards ([[putBloom]]), in one pass.
+    * MANDATORY after every seen-table append: a bloom-negative row is
+    * classified *definitely novel* and bypasses the cuckoo/exact path, so a
+    * stale bloom would cause re-fetches. */
+  def addToFilters(newKeys: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit =
+    forEachBucket(newKeys, dir, buckets) { (b, keys) =>
+      putCuckoo(dir, b, keys)
+      putBloom(dir, b, keys, fresh = false)
+    }
+
+  /** Fold keys into the bloom shards only. It repeats what [[addToFilters]]
+    * already does for the bloom tier; it remains only for its existing
+    * callers (the benchmark's replay, SeenSetSpec) and goes away once the
+    * store keeps a single filter tier. */
+  def addToBloom(newKeys: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit =
+    forEachBucket(newKeys, dir, buckets)(putBloom(dir, _, _, fresh = false))
+
+  /** Build a filter over `keys` sized for at least `minCapacity`, retrying at
+    * double capacity if partial-key eviction fails early (cuckoo inserts can
+    * fail below nominal load under adversarial fingerprint collisions). */
+  @scala.annotation.tailrec
+  private def buildFilter(keys: Array[Long], minCapacity: Long): CuckooFilter = {
+    val f = CuckooFilter.create(minCapacity)
+    if (keys.forall(f.add)) f else buildFilter(keys, minCapacity * 2)
+  }
+
+  private def loadBucket(dir: String, b: Int): Option[CuckooFilter] =
+    readIfExists(bucketFile(dir, b))(CuckooFilter.deserialize)
+
+  def loadBloom(dir: String, b: Int): Option[BloomFilter] =
+    readIfExists(bloomFile(dir, b))(BloomFilter.readFrom)
+
+  private def readIfExists[T](p: Path)(read: InputStream => T): Option[T] =
     if (!Files.exists(p)) None
     else {
       val in = new BufferedInputStream(Files.newInputStream(p))
-      try Some(BloomFilter.readFrom(in)) finally in.close()
+      try Some(read(in)) finally in.close()
     }
-  }
 
   /** Flag duplicates in one pass: adds a `__dup` boolean column to `incoming`
     * (which must carry `url_hash`).
@@ -340,7 +299,7 @@ object SeenSet {
     }
     def apply(h: Long): Boolean = {
       val filters = this.filters
-      val b = (((h % buckets) + buckets) % buckets).toInt
+      val b = bucketOf(h, buckets)
       // absent shard bloom = nothing recorded for the range → conservative
       // maybe-seen only if the cuckoo bucket says so (both absent → exact
       // join decides)

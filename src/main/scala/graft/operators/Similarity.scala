@@ -56,27 +56,6 @@ object Similarity {
       .agg(max(col("est_jaccard")).as("est_jaccard"))
   }
 
-  /** SimHash near-duplicate pairs: bucket by the high `prefixBits` of the
-    * simhash (+ rotations would widen recall; one prefix band keeps the demo
-    * shuffle-light), verify by hamming distance. */
-  def simhashNearDupPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 8,
-      prefixBits: Int = 12): DataFrame = {
-    val withSig = docs.select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("sim", simhash64(col("text")))
-      .withColumn("bucket", shiftrightunsigned(col("sim"), 64 - prefixBits))
-    val a = withSig.select(col("id").as("id_a"), col("sim").as("sim_a"), col("bucket"))
-    val b = withSig.select(col("id").as("id_b"), col("sim").as("sim_b"), col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming64(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** Exact n-gram-Jaccard verification of candidate pairs (joins texts back
     * only for the candidate slice). `pairs` must have (id_a, id_b). */
   def verifyPairsJaccard(

@@ -5,7 +5,7 @@ import graft.model._
 import graft.operators.{Dedup, Politeness, SeenSet, Segregate}
 import graft.sources.{Snapshots, Synth, SynthConfig}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -67,10 +67,11 @@ final case class RoundReport(
   *  6. kept docs → paragraph segregation + sentence/word filter ([[Segregate]]);
   *  7. snapshot commit (frontier rewrite + per-table deltas; row counts from
   *     parquet footers — zero counting jobs) — crash-resumable at round
-  *     granularity ([[Snapshots]]), then cuckoo+bloom filter update.
+  *     granularity ([[Snapshots]]), then one update of both seen-set
+  *     filter tiers (cuckoo buckets and bloom shards).
   *
   * Actions per round are deliberately few: three metric aggregations on
-  * persisted frames, seven table writes, two filter updates. Everything else
+  * persisted frames, seven table writes, one filter update. Everything else
   * is derived arithmetically or from parquet footers. Spark JOBS are more:
   * AQE submits one per query stage and broadcast. Every read passes the
   * table's declared schema ([[TableSchemas]]), so no read runs a
@@ -155,12 +156,8 @@ object Crawler {
 
   /** Seen table across all committed rounds (exact side of D1). */
   def seenAll(spark: SparkSession, workDir: String): DataFrame =
-    seenAllOpt(spark, workDir)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("url_hash", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("canonical_url", org.apache.spark.sql.types.StringType)))))
+    seenAllOpt(spark, workDir).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], TableSchemas(SeenTable)))
 
   private def frontierCols(spark: SparkSession): Seq[String] = {
     import spark.implicits._
@@ -595,9 +592,8 @@ object Crawler {
       .select(fCols.map(col): _*)
 
     // within-round frontier dedup: keep-first per canonical URL (total order)
-    val wFront = Window.partitionBy($"canonical_url").orderBy($"priority", $"url")
-    val nextNew = newEntries.withColumn("__rn", row_number().over(wFront))
-      .filter($"__rn" === 1).drop("__rn").as[FrontierEntry]
+    val nextNew = Dedup.keepFirst(newEntries, Seq($"canonical_url"), Seq($"priority", $"url"))
+      .as[FrontierEntry]
 
     val nextFrontier = deferred.unionByName(retriesFor(failCount)).unionByName(nextNew)
 
@@ -710,15 +706,10 @@ object Crawler {
       merge_requests = counts(MergeRequestsTable),
       new_paragraphs = counts(ParagraphsTable))
 
-    // bloom + cuckoo filters track the just-committed seen delta; the two
-    // updates touch disjoint files and read the same tiny delta — run them
-    // concurrently (two more fixed jobs off the critical path)
+    // both filter tiers track the just-committed seen delta, in one pass
     if (counts(SeenTable) > 0) {
       val committedSeenDelta = readTable(spark, workDir, round, SeenTable)
-      val fCuckoo = Future(named("cuckoo-update")(SeenSet.addToFilters(committedSeenDelta, filterDir(workDir))))
-      val fBloom = Future(named("bloom-update")(SeenSet.addToBloom(committedSeenDelta, filterDir(workDir))))
-      Await.result(fCuckoo, Duration.Inf)
-      Await.result(fBloom, Duration.Inf)
+      named("filter-update")(SeenSet.addToFilters(committedSeenDelta, filterDir(workDir)))
     }
 
     // periodic history compaction (Iceberg rewrite_data_files analog): fold
@@ -779,8 +770,7 @@ object Crawler {
   def mergedJudgments(spark: SparkSession, workDir: String): DataFrame = {
     // a store whose every round was pdf-only has no judgments table
     val judgments = readDeltas(spark, workDir, JudgmentsTable).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TableSchemas(JudgmentsTable)))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], TableSchemas(JudgmentsTable)))
     val merges = readDeltas(spark, workDir, MergeRequestsTable)
       .getOrElse(judgments.limit(0))
     graft.operators.Merge.mergeEntries(

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.io.{BufferedOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -204,12 +206,19 @@ object Snapshots {
   def compactedUpTo(dir: String, table: String): Int =
     currentSegments(dir, table).lastOption.map(_._2).getOrElse(0)
 
-  private def writeMarker(dir: String, table: String, segNames: Seq[String]): Unit = {
-    Files.createDirectories(baseRoot(dir, table))
-    val tmp = Files.createTempFile(baseRoot(dir, table), "current", ".tmp")
-    Files.writeString(tmp, segNames.mkString("\n"))
-    Files.move(tmp, baseMarker(dir, table), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+  private def writeMarker(dir: String, table: String, segNames: Seq[String]): Unit =
+    replaceFile(baseMarker(dir, table))(_.write(segNames.mkString("\n").getBytes(UTF_8)))
+
+  /** Replace `target` atomically: `write` fills a temp file in the target's
+    * directory (named after the target, suffix `.tmp`), which is then renamed
+    * over it, so a reader sees the old file or the new one, never a partial
+    * write. */
+  private[graft] def replaceFile(target: Path)(write: OutputStream => Unit): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(target.getParent, target.getFileName.toString, ".tmp")
+    val out = new BufferedOutputStream(Files.newOutputStream(tmp))
+    try write(out) finally out.close()
+    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def parquetBytes(p: String): Long = {
@@ -262,7 +271,9 @@ object Snapshots {
         val n = c.getFileName.toString
         val stale =
           (n.startsWith("seg=") && !listed.contains(n)) ||
-            (n.startsWith("current") && n.endsWith(".tmp"))
+            // marker temps: `CURRENT*.tmp` ([[replaceFile]]), and the
+            // lower-case `current*.tmp` older stores may still hold
+            (n.toLowerCase.startsWith("current") && n.endsWith(".tmp"))
         if (stale) deleteRecursively(c)
       }
     }

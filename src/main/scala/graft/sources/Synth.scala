@@ -524,9 +524,10 @@ object Synth {
   // in UTF8String↔java.lang.String conversion around the old typed fetch
   // chain: Dataset[Sched].filter(typed lambda) deserialized every row for a
   // boolean, mapPartitions deserialized the 13-field entry again, and the
-  // FetchEvent encoder re-serialized all eight entry strings per row. The
-  // fetch is stateless per row, so it runs as ONE codegen expression
-  // ([[graft.functions.SynthFetchExpr]]) over the sched frame instead: the
+  // typed fetch-row encoder re-serialized all eight entry strings per row.
+  // The fetch is stateless per row, so it runs as ONE codegen expression
+  // ([[graft.functions.SynthFetchExpr]]) over the sched frame instead, and
+  // Politeness.fetchAll flattens its struct into the fetch projection: the
   // entry struct is never decoded, the only String materialized per row is
   // the url (the generator's parse input).
   private val UOk = org.apache.spark.unsafe.types.UTF8String.fromString("ok")

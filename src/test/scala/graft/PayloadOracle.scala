@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.model.{Doc, Paragraph, Span}
+import graft.model.{Doc, Span}
 import graft.operators.{Dedup, Segregate}
 import graft.sources.{Synth, Wire}
 
@@ -20,6 +20,17 @@ import org.apache.spark.sql.functions._
   * way the reference states it; the kernels must agree with it bit for bit
   * (HashingSpec, SegregateSpec, WireSpec, CrawlOracle). */
 object PayloadOracle {
+
+  /** One segregated paragraph (`src/segregators/adobe_json.py:48-54`): a
+    * `paragraphs` table row. */
+  final case class Paragraph(
+      doc_id: String,
+      extractor: String,
+      page: Int,
+      paragraph_number: Int,
+      content: String,
+      reference: String // starter numeral, spaces removed, e.g. "1.2."; null if none
+  )
 
   // ---------- payload encode / decode ----------
 

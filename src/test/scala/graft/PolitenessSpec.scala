@@ -88,9 +88,9 @@ class PolitenessSpec extends AnyFunSuite {
     val sched = schedule(bigHostFrontier(200), cfg)
     val interval = 50000L // 50 ms ⇒ ≤ 20 req/s/host (25 req/min analog scaled)
     val limited = Politeness.fetchAll(sched, SynthConfig(), interval)
-      .as[graft.operators.FetchEvent].collect()
+      .as[PolitenessSpec.FetchRow].collect()
     val free = Politeness.fetchAll(sched, SynthConfig())
-      .as[graft.operators.FetchEvent].collect()
+      .as[PolitenessSpec.FetchRow].collect()
     // every bucket drains sequentially, so Σ latency is the bucket wall:
     // wall >= n × interval ⇒ rate = n / wall <= 1e6 / interval
     limited.groupBy(e => (e.entry.host, e.salt)).foreach { case (_, evs) =>
@@ -101,7 +101,7 @@ class PolitenessSpec extends AnyFunSuite {
     assert(limited.forall(_.latencyMicros >= interval))
     // crawl order and outcomes are IDENTICAL with the limiter off/on — the
     // cap only stretches modeled latency
-    def order(evs: Array[graft.operators.FetchEvent]) =
+    def order(evs: Array[PolitenessSpec.FetchRow]) =
       evs.sortBy(e => (e.entry.host, e.salt, e.fetchSeq)).map(e => (e.entry.url, e.status, e.kind)).toSeq
     assert(order(limited) === order(free))
   }
@@ -159,4 +159,10 @@ class PolitenessSpec extends AnyFunSuite {
         e.getMessage.toLowerCase.contains("data type mismatch"), e.getMessage)
     }
   }
+}
+
+object PolitenessSpec {
+  /** The columns of a `Politeness.fetchAll` row this suite reads. */
+  final case class FetchRow(entry: FrontierEntry, salt: Int, fetchSeq: Int, status: String,
+      kind: String, latencyMicros: Long)
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.SeenSet
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -161,6 +163,53 @@ class SeenSetSpec extends AnyFunSuite {
       SeenSet.releaseProbeFilters() // releasing nothing is a no-op
       assert(dups === 200L)
     }
+  }
+
+  private def keyFrame(ids: Seq[Long]) =
+    ids.map(i => (i * 2654435761L, s"https://h.example.org/u/$i")).toDF("url_hash", "canonical_url")
+
+  private def filesEndingIn(dir: String, suffix: String): Set[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(suffix)).toSet
+    finally s.close()
+  }
+
+  test("addToFilters alone keeps both tiers current") {
+    val dir = Files.createTempDirectory("seenboth").toString
+    val buckets = 4
+    val ids = 0L until 500L
+    val inserted = keyFrame(ids)
+    SeenSet.addToFilters(inserted, dir, buckets)
+    // bloom tier: every inserted key is positive in its owning shard
+    val misses = ids.map(_ * 2654435761L).filterNot { h =>
+      SeenSet.loadBloom(dir, SeenSet.bucketOf(h, buckets)).exists(_.mightContainLong(h))
+    }
+    assert(misses.size === 0, s"keys missing from their bloom shard, first: ${misses.take(3)}")
+    // cuckoo tier: every bucket that received keys has its file
+    val owning = ids.map(i => SeenSet.bucketOf(i * 2654435761L, buckets)).toSet
+    assert(owning.map(b => f"bucket-$b%05d.cuckoo") === filesEndingIn(dir, ".cuckoo"))
+    // the probe flags exactly the inserted keys
+    val incoming = keyFrame(0L until 1000L)
+    val flagged = SeenSet.markDupes(incoming, inserted, dir, buckets,
+      probeRepartition = false, seenKeysUnique = true)
+      .filter(col("__dup")).select("url_hash").as[Long].collect().toSet
+    assert(flagged === ids.map(_ * 2654435761L).toSet)
+  }
+
+  test("a rebuilt store's buckets take incremental keys without saturating") {
+    val dir = Files.createTempDirectory("seenresume").toString
+    val buckets = 2
+    val first = keyFrame(0L until 100L)
+    val later = keyFrame(100L until 1100L)
+    SeenSet.rebuildFilters(first, dir, buckets)
+    SeenSet.addToFilters(later, dir, buckets)
+    assert(filesEndingIn(dir, ".saturated").isEmpty,
+      "a rebuild must size its buckets at least as large as an incremental update creates them")
+    val seen = first.union(later)
+    val marked = SeenSet.markDupes(keyFrame(1000L until 1200L), seen, dir, buckets,
+      probeRepartition = false, seenKeysUnique = true)
+    assert(marked.filter(col("__dup")).count() === 100L)
+    assert(marked.filter(!col("__dup")).count() === 100L)
   }
 
   test("hash-collision safety: same url_hash, different canonical_url is NOT a dup") {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.model.{Doc, Paragraph, Span}
+import graft.PayloadOracle.Paragraph
+import graft.model.{Doc, Span}
 import graft.operators.Segregate
 import graft.sources.Wire
 import org.apache.spark.sql.functions._

@@ -35,13 +35,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(unrelated.isEmpty, s"false positives: $unrelated")
   }
 
-  test("simhash pairs find the exact dup with hamming 0") {
-    val pairs = Similarity.simhashNearDupPairs(corpus, "doc_id", "text",
-      maxHamming = 3, prefixBits = 8)
-      .as[(Long, Long, Int)].collect()
-    assert(pairs.exists { case (a, b, h) => a == 2L && b == 200L && h == 0 })
-  }
-
   test("verifyPairsJaccard: exact dup verifies at 1.0") {
     val cand = Seq((2L, 200L)).toDF("id_a", "id_b")
     val v = Similarity.verifyPairsJaccard(cand, corpus, "doc_id", "text", 3)

@@ -17,15 +17,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     df.collect().foreach(r => assert(r.getInt(0) === r.getInt(1)))
   }
 
-  test("shingles: k-grams in order; short text yields empty") {
-    val got = Seq("a b c d").toDF("t").select(TF.shingles($"t", 2).as("s"))
-      .as[Seq[String]].head()
-    assert(got === Seq("a b", "b c", "c d"))
-    val short = Seq("a").toDF("t").select(TF.shingles($"t", 2).as("s"))
-      .as[Seq[String]].head()
-    assert(short === Seq.empty)
-  }
-
   test("minhash: identical texts → identical signatures; estimate tracks exact jaccard") {
     val base = (1 to 60).map(i => s"w$i").mkString(" ")
     val near = (1 to 54).map(i => s"w$i").mkString(" ") + " x1 x2 x3 x4 x5 x6"
